@@ -29,7 +29,6 @@ object Plans {
     "q_zorder" -> "bounds broadcast (single-row join); interleave is pure projection",
     "q_skew_join" -> "hot keys broadcast both paths; salted exchange spreads the hot reducer",
     "q_gap_fill" -> "per-user sequence + user-partitioned windows; no global calendar join",
-    "lake_bucket_join" -> "bucketed scans satisfy the join distribution: SortMergeJoin with no Exchange on the key",
     "q_heavy_hitters" -> "one count shuffle + broadcast scalar total; threshold filters map-side",
     "dedup_containment" -> "inverted shingle equi-join (co-occurrence-bounded); df guard before the pair join",
     "text_nb" -> "model joins the term stream on word (shuffle join — web-scale vocab never broadcast); class grid is the broadcast side",
@@ -109,7 +108,6 @@ object Plans {
     "lake_txn" -> "snapshot read is a plain multi-file parquet scan (pushdown intact — the commit log is driver-scale metadata); the only exchange is the presentation sort",
     "lake_txn_cdc" -> "file-pruned CoW merge: change keys BROADCAST into the semi-join (find affected files) and the anti-join (drop old rows); only affected files rescan for the rewrite — the unaffected corpus never moves",
     "q_global_sort" -> "global total order via rangepartitioning with sampled bounds — the sort distributes across 32 partitions, no SinglePartition stage",
-    "lake_sorted_write" -> "range exchange + within-partition sort at WRITE time buys tight per-file footer stats; the read side is a manifest-pruned file list with the band filter pushed to the scan",
     "text_bbpe_pretok" -> "one codegen'd regexp_extract_all projection + Generate (posexplode) — zero shuffle before the presentation sort",
     "mm_mp4_frames" -> "stsc/stco/stsz walk + per-frame JPEG decode inside mapPartitions over the payload scan; only fixed-width frame stats cross the shuffle — video bytes never leave the scan stage",
     "mm_audio_tones" -> "RIFF walk + PCM decode + integer DFT inside mapPartitions; only (bin, re, im, magnitude) rows cross the shuffle — audio bytes never leave the scan stage",

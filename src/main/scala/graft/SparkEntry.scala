@@ -189,11 +189,12 @@ object SparkEntry {
     // with a per-file (encoding, wire-bytes) report
     "src_charset" -> ((s, d) =>
       graft.sources.Charset.roundTrip(s, Tables.documents(s, d), d)),
-    // Hive-partitioned lake layout: the lang predicate prunes at the
-    // directory listing; content (incl. the path-carried partition
+    // hive-partitioned lake table: the lang predicate prunes the file
+    // list from the log; content (incl. the log-carried partition
     // column) is the graded claim
     "lake_partition_prune" -> ((s, d) =>
-      ext.Lake.partitionPrunedRoundTrip(s, Tables.documents(s, d), d)),
+      ext.LakeTxn.partitionQuery(s, Tables.documents(s, d), d, Seq("en", "de"), "partprune")
+        .select("doc_id", "text", "lang", "source", "n_chars")),
     // ---- relational surface (SURVEY.md §2.2) ----
     "q1_pricing_summary" -> ((s, d) => Relational.pricingSummary(Tables.lineitem(s, d))),
     // named TPC-H anchors: Q3 (selective dims -> fact join -> top-k) and
@@ -511,7 +512,7 @@ object SparkEntry {
     // prefix-filtered exact threshold Jaccard: the oracle is the NAIVE
     // full inverted join — output equivalence is the pruning's contract.
     // t=0.8 is the operator's measured regime (high-threshold near-dup
-    // mining; see the prefixJaccardPairs Scaladoc for the ProfileScratch
+    // mining; see the prefixJaccardPairs Scaladoc for the measured
     // numbers): at low t the prefix keeps most of the index and the
     // plain inverted join (dedup_ngram_jaccard) is the right tool
     "dedup_jaccard_prefix" -> ((s, d) =>
@@ -710,7 +711,7 @@ object SparkEntry {
         Similarity.bruteForceTopK(emb, 0L until 8L, 5))
     }),
     "sim_label_stats" -> ((s, d) => Similarity.labelStats(Tables.embeddings(s, d))),
-    // iters=2: measured (ProfileScratch) — top-5 recall at nprobe=4/16 is
+    // iters=2: measured — top-5 recall at nprobe=4/16 is
     // 1.000 at 1-2 Lloyd rounds and DROPS to 0.95-0.975 at 3-5 (tighter
     // cells spread true neighbors past the probe budget), so extra
     // rounds cost time and recall here; library default stays 5.
@@ -718,7 +719,7 @@ object SparkEntry {
     // candidate set (and so the result) is oracle-replayable.
     "sim_ivf" -> ((s, d) =>
       ext.Ivf.ivfTopKSnapped(Tables.embeddings(s, d), 0L until 8L, 5, 16, 4, iters = 2)),
-    // iters=3: measured on this corpus (ProfileScratch), PQ recall is
+    // iters=3: measured on this corpus, PQ recall is
     // flat across 1..5 Lloyd rounds (0.175-0.225, noise band) — the
     // near-isotropic synthetic embeddings plateau immediately, so the
     // benchmark exercises a measured-adequate setting; the library
@@ -904,26 +905,21 @@ object SparkEntry {
       Similarity.mipsTopK(Tables.embeddings(s, d), 0L until 8L, 5)),
     "q_array_agg" -> ((s, d) => Relational.orderQuantityProfile(Tables.lineitem(s, d))),
     "q_time_weighted" -> ((s, d) => Relational.timeWeightedValue(Tables.events(s, d))),
-    // bucketed-lake co-located join: both sides pre-bucketed on the key,
-    // so the sort-merge join runs with ZERO Exchange (PlanSpec proves it);
-    // the result is identical to the plain join the oracle runs
-    "lake_bucket_join" -> ((s, d) => {
-      val joined = ext.Lake.bucketedJoin(s, Tables.orders(s, d),
-        Tables.customer(s, d).withColumnRenamed("c_custkey", "o_custkey"), "o_custkey")
-      joined.groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_orders"),
-          sum(Relational.cents(col("o_totalprice"))).as("revenue_cents"))
-        .orderBy("c_mktsegment")
-    }),
+    // bucketed-lake co-located join: both lake tables bucket-stamped in
+    // the log, so the sort-merge join runs with no join-key Exchange
+    // (asserted in-query); the result is identical to the plain join
+    // the oracle runs
+    "lake_bucket_join" -> ((s, d) =>
+      sources.GraftLakeCatalog.sqlBucketJoinQuery(s, d, "bucket")),
     // lake OPTIMIZE: 64 tiny ingest landings bin-packed (no shuffle —
-    // coalesce) into ~target-size files; graded on exact content
-    // preservation, the one thing compaction must never change
+    // coalesce) into ~target-size files in one commit; graded on exact
+    // content preservation, the one thing compaction must never change
     "lake_compact" -> ((s, d) =>
-      ext.Lake.compactRoundTrip(s, Tables.documents(s, d), d)),
-    // range-partitioned sorted write; a selective band read back through
-    // the per-file min/max manifest (footer stats) — 1-D data skipping
+      ext.LakeTxn.compactQuery(s, Tables.documents(s, d), d)),
+    // range-partitioned sorted write with per-file min/max in the log; a
+    // selective band read prunes the file list from it — 1-D data skipping
     "lake_sorted_write" -> ((s, d) =>
-      ext.Lake.sortedWriteRoundTrip(s, Tables.orders(s, d), d)),
+      ext.LakeTxn.skippingQuery(s, Tables.orders(s, d), d, "sorted")),
     // GLOBAL total order via RangePartitioning (sampled bounds, never a
     // single-partition sort) — the write-side sibling grades the files,
     // this grades the order itself
@@ -968,7 +964,7 @@ object SparkEntry {
     // selective band read prunes the file list from the log alone (zero
     // footer opens — the spec corrupts skipped files and still reads)
     "lake_txn_skipping" -> ((s, d) =>
-      ext.LakeTxn.skippingQuery(s, Tables.orders(s, d), d)),
+      ext.LakeTxn.skippingQuery(s, Tables.orders(s, d), d, "skip")),
     // MERGE-ON-READ delete: deletion vectors (file basename + row
     // position, from _metadata.row_index) tombstone rows in ONE commit
     // with zero data files rewritten; the read anti-joins them away —
@@ -1042,7 +1038,7 @@ object SparkEntry {
     // in the log, KeyGroupedPartitioning reported, storage-partitioned
     // join with zero join-key Exchange (asserted in-query)
     "lake_txn_bucket_join" -> ((s, d) =>
-      sources.GraftLakeCatalog.sqlBucketJoinQuery(s, d)),
+      sources.GraftLakeCatalog.sqlBucketJoinQuery(s, d, "sqlbkt")),
     // readStream.table through the catalog: same micro-batch stream as
     // the path API, restart-resume over one checkpoint
     "stream_lake_catalog" -> ((s, d) =>
@@ -1076,7 +1072,7 @@ object SparkEntry {
     // hive-partitioned appends: partition values live only in the log
     // (files lack the column); the read prunes and reinjects from it
     "lake_txn_partition" -> ((s, d) =>
-      ext.LakeTxn.partitionQuery(s, Tables.documents(s, d), d)),
+      ext.LakeTxn.partitionQuery(s, Tables.documents(s, d), d, Seq("en", "fr"), "part")),
     // OPTIMIZE ZORDER: unclustered appends re-clustered copy-on-write;
     // the box read then prunes from the log-recorded 2-D stats
     "lake_optimize_zorder" -> ((s, d) =>
@@ -3258,8 +3254,7 @@ object SparkEntry {
         |  UNION ALL
         |  SELECT doc_id + 1000000, 'added' FROM documents WHERE doc_id % 13 = 0)
         |ORDER BY doc_id""".stripMargin,
-    // the transactional bucketed join shares the path-based bucketed
-    // join's ground truth — one oracle, two layouts
+    // the same query as lake_bucket_join, so the same ground truth
     "lake_txn_bucket_join" ->
       """SELECT c_mktsegment, count(*) AS n_orders,
         |  sum(CAST(round(o_totalprice*100) AS BIGINT))::BIGINT AS revenue_cents

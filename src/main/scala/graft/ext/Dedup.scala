@@ -570,7 +570,7 @@ object Dedup {
     * before the verify join. `maxDf` composes as in [[ngramJaccardPairs]]
     * with identical dropped-shingle semantics.
     *
-    * MEASURED regime boundary (ProfileScratch `jaccard`, sf0.1): on the
+    * MEASURED regime boundary (sf0.1): on the
     * benign synthetic corpus the naive inverted join is NOT
     * co-occurrence-bound, and it counts intersections inline while this
     * operator pays a separate candidate-restricted verify join — naive

@@ -347,10 +347,10 @@ object Incremental {
     * change log — map-side partial, no window over the log), then ONE
     * full-outer equi-join with the base on the id. Ingest cost is
     * proportional to |changes| + one co-partitioned pass over the base;
-    * with both sides bucketed by id ([[Lake.writeBucketed]]) the join is
-    * exchange-free. Ties on (id, seq) are resolved by the total order
-    * (seq, op, payload…), so reruns are deterministic even on a
-    * degenerate log; producers should still emit unique seqs per id. */
+    * with both sides bucketed by id ([[LakeTxn.appendCommitBucketed]])
+    * the join is exchange-free. Ties on (id, seq) are resolved by the
+    * total order (seq, op, payload…), so reruns are deterministic even
+    * on a degenerate log; producers should still emit unique seqs per id. */
   def applyChanges(base: DataFrame, changes: DataFrame,
                    payloadCols: Seq[String], idCol: String = "doc_id",
                    seqCol: String = "seq", opCol: String = "op"): DataFrame = {

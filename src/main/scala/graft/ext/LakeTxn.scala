@@ -170,17 +170,21 @@ object LakeTxn {
     * are followed by `}}`, never by a lone line-final `}`. */
   private val InCommitTsRe = ""","tsMs":(\d+)\}$""".r
 
-  /** The FIRST LINE of a file (capped — the stamp is always on line
-    * one by wire contract, so resolution never reads a whole
-    * many-thousand-action commit body). */
-  private def readFirstLine(fs: FileSystem, p: Path,
-                            cap: Int = 1 << 16): String = {
-    val in = fs.open(p)
+  /** The LAST `keep` bytes of a file's first line. The stamp closes
+    * line one by wire contract, so the tail carries it however long the
+    * line grows (a large DV `dr` list, bloom or `sx` blob), and
+    * resolution never reads past line one of a many-thousand-action
+    * commit body. */
+  private def firstLineTail(fs: FileSystem, p: Path, keep: Int = 64): String = {
+    val in = new java.io.BufferedInputStream(fs.open(p))
     try {
-      val out = new java.io.ByteArrayOutputStream()
+      val ring = new Array[Byte](keep)
+      var n = 0L
       var b = in.read()
-      while (b >= 0 && b != '\n' && out.size < cap) { out.write(b); b = in.read() }
-      new String(out.toByteArray, UTF_8)
+      while (b >= 0 && b != '\n') { ring((n % keep).toInt) = b.toByte; n += 1; b = in.read() }
+      val k = math.min(n, keep.toLong).toInt
+      val tail = Array.tabulate(k)(i => ring(((n - k + i) % keep).toInt))
+      new String(tail, UTF_8)
     } finally in.close()
   }
 
@@ -190,7 +194,7 @@ object LakeTxn {
   def commitTimestamp(spark: SparkSession, table: String,
                       v: Long): Option[Long] = {
     val p = commitFile(table, v)
-    InCommitTsRe.findFirstMatchIn(readFirstLine(fsOf(spark, p), p))
+    InCommitTsRe.findFirstMatchIn(firstLineTail(fsOf(spark, p), p))
       .map(_.group(1).toLong)
   }
 
@@ -2407,7 +2411,9 @@ object LakeTxn {
     // live deletion vectors, so the commit also removes (purges) them —
     // compaction is how DV debt gets paid down
     val packed = scanWithDvs(spark, table, snap, snap.files)
-      .coalesce(nOut) // pure bin-packing: no shuffle, see Lake.compact
+      // coalesce, not repartition: each output task concatenates whole
+      // input files, so no byte of the table crosses a shuffle
+      .coalesce(nOut)
     // the read version rides into the commit: an interleaved rewrite of
     // any packed file aborts this compaction instead of resurrecting it
     commitAt(spark, table, snap.version, stage(spark, packed, table),
@@ -2692,8 +2698,9 @@ object LakeTxn {
     * skipped files on disk and the read still succeeds, the proof they
     * are never touched. Graded on content: pruning must change nothing
     * but the files opened. */
-  def skippingQuery(spark: SparkSession, orders: DataFrame, sfDir: String): DataFrame = {
-    val t = freshTable(spark, sfDir, "skip")
+  def skippingQuery(spark: SparkSession, orders: DataFrame, sfDir: String,
+                    name: String): DataFrame = {
+    val t = freshTable(spark, sfDir, name)
     val priced = orders.select(col("o_orderkey"),
       round(col("o_totalprice") * 100).cast("long").as("price_cents"),
       col("o_orderstatus"))
@@ -2828,14 +2835,26 @@ object LakeTxn {
     * column); a two-partition read prunes the file list from the log
     * alone and reinjects the column as per-file literals (LakePartSpec
     * corrupts the other partitions' files to prove they are never
-    * opened). Graded on the two-partition content. */
-  def partitionQuery(spark: SparkSession, docs: DataFrame, sfDir: String): DataFrame = {
-    val t = freshTable(spark, sfDir, "part")
+    * opened). Graded on the content of the `langs` partitions. */
+  def partitionQuery(spark: SparkSession, docs: DataFrame, sfDir: String,
+                     langs: Seq[String], name: String): DataFrame = {
+    val t = freshTable(spark, sfDir, name)
     val d = docCols(docs)
     appendCommitPartitioned(spark, d.filter(col("doc_id") % 2 === 0), t, "lang")
     appendCommitPartitioned(spark, d.filter(col("doc_id") % 2 === 1), t, "lang")
-    val (df, _, _) = readPartitions(spark, t, "lang", Seq("en", "fr"))
+    val (df, _, _) = readPartitions(spark, t, "lang", langs)
     df.orderBy("doc_id")
+  }
+
+  /** lake_compact: the documents fragmented into 64 small files in one
+    * append (a stand-in for per-trigger ingest landings), then one
+    * compaction commit to ~1 MiB targets. Graded on the compacted
+    * snapshot's content — the one thing bin-packing must never change. */
+  def compactQuery(spark: SparkSession, docs: DataFrame, sfDir: String): DataFrame = {
+    val t = freshTable(spark, sfDir, "compact")
+    appendCommit(spark, docCols(docs).repartition(64), t)
+    compactCommit(spark, t, 1L << 20)
+    docCols(read(spark, t)).orderBy("doc_id")
   }
 
   /** lake_txn_constraint: a CHECK constraint registered on a live table

@@ -8,12 +8,13 @@ import org.apache.spark.sql.functions._
   *
   * A linear sort on `x` clusters `x` ranges but scatters `y`; a z-order
   * sort interleaves the bits of both dimensions so rows close in (x, y)
-  * are close in z. Writing the table range-partitioned (or
-  * directory-partitioned) by z means a box predicate
-  * `x BETWEEN x1 AND x2 AND y BETWEEN y1 AND y2` touches only the files
-  * whose z range intersects `[z(x1,y1), z(x2,y2)]` — the standard
-  * data-skipping layout Delta/Iceberg expose as `OPTIMIZE ZORDER BY`,
-  * built here from plain Spark bit expressions (codegen'd, no UDF).
+  * are close in z. Writing the table range-partitioned by z
+  * ([[LakeTxn.appendCommitZorder]], [[LakeTxn.optimizeZorder]]) means a
+  * box predicate `x BETWEEN x1 AND x2 AND y BETWEEN y1 AND y2` touches
+  * only the files whose z range intersects `[z(x1,y1), z(x2,y2)]` — the
+  * standard data-skipping layout Delta/Iceberg expose as
+  * `OPTIMIZE ZORDER BY`, built here from plain Spark bit expressions
+  * (codegen'd, no UDF).
   *
   * All arithmetic is integer-exact and engine-portable: quantization uses
   * the exact-cents pattern (scaled BIGINT), and the interleave is a fixed
@@ -64,37 +65,9 @@ object Zorder {
       .drop("__xmin", "__xmax", "__ymin", "__ymax")
   }
 
-  /** Write `df` z-clustered: rows carry a `zbucket` directory key (the
-    * top `bucketBits` of z) and are sorted by z within files, so both
-    * directory pruning and parquet row-group min/max stats line up with
-    * the curve. Coordinates must already be quantized longs in
-    * [0, 2^bits) — the raw-coordinate path for when the caller owns
-    * quantization (ids, enum codes, day numbers). */
-  def writeClustered(df: DataFrame, path: String, xCol: Column, yCol: Column,
-                     bits: Int = 16, bucketBits: Int = 4): Unit = {
-    require(bucketBits >= 1 && bucketBits <= 2 * bits,
-      s"bucketBits must be in [1, ${2 * bits}]")
-    val shift = 2 * bits - bucketBits
-    val z = df.withColumn("zvalue", zInterleave(xCol, yCol, bits))
-      .withColumn("zbucket", shiftrightunsigned(col("zvalue"), shift))
-    z.repartitionByRange(col("zbucket"), col("zvalue"))
-      .sortWithinPartitions("zvalue")
-      .write.mode("overwrite").partitionBy("zbucket").parquet(path)
-  }
-
-  /** Bucket range a box predicate needs: z is bounded by the z of the
-    * box's min and max corners, so only directories in
-    * [z(x1,y1) >> shift, z(x2,y2) >> shift] can hold matches. */
-  def boxBuckets(x1: Long, y1: Long, x2: Long, y2: Long,
-                 bits: Int = 16, bucketBits: Int = 4): (Long, Long) = {
-    require(bucketBits >= 1 && bucketBits <= 2 * bits,
-      s"bucketBits must be in [1, ${2 * bits}]")
-    val shift = 2 * bits - bucketBits
-    (zOf(x1, y1, bits) >>> shift, zOf(x2, y2, bits) >>> shift)
-  }
-
-  /** Driver-side scalar twin of [[zInterleave]] (for planning bucket
-    * ranges without a Spark job) — saturates identically. */
+  /** Driver-side scalar twin of [[zInterleave]] — saturates
+    * identically; the reference model ZorderSpec checks the column
+    * interleave against. */
   def zOf(x: Long, y: Long, bits: Int = 16): Long = {
     val top = (1L << bits) - 1
     val cx = math.max(0L, math.min(x, top))

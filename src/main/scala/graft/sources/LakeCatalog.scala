@@ -19,11 +19,11 @@ import graft.ext.LakeTxn
 
 /** The transactional lake as a V2 `TableCatalog` — the SQL DDL surface
   * the path-only connector lacks: `CREATE / DROP / ALTER TABLE ...
-  * USING graft-lake`, `INSERT INTO`, `SELECT`, `saveAsTable`,
-  * `spark.table`, all resolving through the commit log. The reference
-  * has no notion of a named persistent table at all (jobs read ad-hoc
-  * upload directories, `interface.py:9-24`); this is the missing
-  * metastore layer, reduced to its load-bearing core.
+  * USING graft-lake`, `INSERT INTO`, `SELECT`, DataFrame writes to a
+  * named table, `spark.table`, all resolving through the commit log.
+  * The reference has no notion of a named persistent table at all (jobs
+  * read ad-hoc upload directories, `interface.py:9-24`); this is the
+  * missing metastore layer, reduced to its load-bearing core.
   *
   * Register: `spark.sql.catalog.<name> = graft.sources.GraftLakeCatalog`
   * and `spark.sql.catalog.<name>.warehouse = <dir>`.
@@ -451,11 +451,12 @@ object GraftLakeCatalog {
     * scans join with NO join-key Exchange (asserted in-query: a
     * shuffle on either key means the write-once bucketing bought
     * nothing — at 100 TB that shuffle is the dominant cost this layout
-    * exists to delete). Same oracle as the path-based
-    * `lake_bucket_join` — one ground truth, two engines. */
-  def sqlBucketJoinQuery(spark: SparkSession, sfDir: String): org.apache.spark.sql.DataFrame = {
+    * exists to delete). Also serves `lake_bucket_join`; `name` keeps
+    * the two registry entries' warehouses apart. */
+  def sqlBucketJoinQuery(spark: SparkSession, sfDir: String,
+                         name: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    val wh = LakeTxn.freshTable(spark, sfDir, "sqlbkt")
+    val wh = LakeTxn.freshTable(spark, sfDir, name)
     withNonceCatalog(spark, wh, "glakebj") { cat =>
       val confs = Seq(
         "spark.sql.sources.v2.bucketing.enabled" -> "true",

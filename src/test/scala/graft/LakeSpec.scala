@@ -1,32 +1,31 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Bucketed-lake layout: the co-located join must (a) return exactly the
-  * plain join's rows and (b) plan with ZERO Exchange — the property that
-  * makes the write-once bucketing pay for itself at 100 TB. */
+import graft.ext.LakeTxn
+
+/** The lake's layout operators on the transactional path: the declared
+  * bucketed join must plan without a join-key Exchange (the property that
+  * makes the write-once bucketing pay for itself at 100 TB), and
+  * `LakeTxn.compactCommit` must bin-pack to the byte-derived file count
+  * without a shuffle and without changing content. */
 class LakeSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  test("bucketed join matches the plain join row-for-row") {
-    val orders = Tables.orders(spark, sf)
-    val cust = Tables.customer(spark, sf).withColumnRenamed("c_custkey", "o_custkey")
-    val bucketed = ext.Lake.bucketedJoin(spark, orders, cust, "o_custkey")
-      .select("o_orderkey", "c_mktsegment").orderBy("o_orderkey").collect().toSeq
-    val plain = orders.join(cust, "o_custkey")
-      .select("o_orderkey", "c_mktsegment").orderBy("o_orderkey").collect().toSeq
-    assert(bucketed.nonEmpty && bucketed === plain)
-  }
+  private def freshDir(name: String): String =
+    s"/tmp/graft_lakespec_${name}_${System.nanoTime()}"
 
-  test("bucketed join plans as sort-merge with zero Exchange") {
-    val orders = Tables.orders(spark, sf)
-    val cust = Tables.customer(spark, sf).withColumnRenamed("c_custkey", "o_custkey")
-    val joined = ext.Lake.bucketedJoin(spark, orders, cust, "o_custkey")
-    val plan = joined.queryExecution
-      .explainString(ExplainMode.fromString("formatted"))
-    assert(plan.contains("SortMergeJoin"), plan.takeRight(1200))
-    assert(!plan.contains("Exchange"), plan.takeRight(1200))
+  private def liveBytes(t: String): Long = {
+    val fs = new org.apache.hadoop.fs.Path(t)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    LakeTxn.snapshot(spark, t).files
+      .map(f => fs.getFileStatus(new org.apache.hadoop.fs.Path(t, f)).getLen).sum
   }
 
   test("declared lake_bucket_join never exchanges on the join key") {
@@ -43,57 +42,65 @@ class LakeSpec extends SparkSpec {
 
   test("compact bin-packs files to the byte-derived count and preserves content exactly") {
     import spark.implicits._
-    val docs = Tables.documents(spark, sf)
-    val base = java.nio.file.Files.createTempDirectory("lake_compact").toString
-    docs.repartition(32).write.parquet(s"$base/frag")
-    val before = new java.io.File(s"$base/frag").listFiles()
-      .filter(f => f.getName.startsWith("part-"))
-    val bytes = before.map(_.length).sum
+    val docs = Tables.documents(spark, sf).select("doc_id", "text")
+    val t = freshDir("compact")
+    LakeTxn.appendCommit(spark, docs.repartition(32), t)
+    assert(LakeTxn.snapshot(spark, t).files.size == 32)
+    val bytes = liveBytes(t)
     // target = half the total bytes -> exactly 2 output files
-    val stats = ext.Lake.compact(spark, s"$base/frag", s"$base/packed", (bytes + 1) / 2)
-    assert(stats.filesBefore == 32 && stats.bytesBefore == bytes)
-    assert(stats.filesAfter == 2)
-    val got = spark.read.parquet(s"$base/packed")
-      .select("doc_id", "text").as[(Long, String)].collect().toSeq.sortBy(_._1)
-    val want = docs.select("doc_id", "text").as[(Long, String)].collect().toSeq.sortBy(_._1)
+    LakeTxn.compactCommit(spark, t, (bytes + 1) / 2)
+    assert(LakeTxn.snapshot(spark, t).files.size == 2)
+    val got = LakeTxn.read(spark, t).as[(Long, String)].collect().toSeq.sortBy(_._1)
+    val want = docs.as[(Long, String)].collect().toSeq.sortBy(_._1)
     assert(got == want)
   }
 
   test("compact plans without a shuffle: coalesce, not repartition") {
-    val docs = Tables.documents(spark, sf)
-    val base = java.nio.file.Files.createTempDirectory("lake_compact_plan").toString
-    docs.repartition(16).write.parquet(s"$base/frag")
-    // replicate the compaction read+coalesce and check its plan directly
-    val plan = spark.read.parquet(s"$base/frag").coalesce(2)
-      .queryExecution.explainString(ExplainMode.fromString("formatted"))
-    assert(plan.contains("Coalesce"), plan.takeRight(800))
-    assert(!plan.contains("Exchange"), plan.takeRight(800))
-  }
-
-  test("partitioned layout prunes at the listing: PartitionFilters on the scan, other dirs untouched") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val docs = Tables.documents(spark, sf)
-    val base = java.nio.file.Files.createTempDirectory("lake_part").toString + "/t"
-    docs.write.partitionBy("lang").parquet(base)
-    val pruned = spark.read.parquet(base).filter(col("lang") === "en")
-    val plan = pruned.queryExecution.explainString(ExplainMode.fromString("formatted"))
-    // the predicate must reach the scan as a PARTITION filter (resolved
-    // against directory names), not a post-scan data Filter
-    assert(plan.contains("PartitionFilters") && plan.contains("lang"), plan.takeRight(900))
-    val got = pruned.select("doc_id").as[Long].collect().toSet
-    val want = docs.filter(col("lang") === "en").select("doc_id").as[Long].collect().toSet
-    assert(got == want && got.nonEmpty)
-    // the partition column round-trips from the PATH, not the file bytes
-    assert(pruned.select("lang").distinct().as[String].collect().toSeq == Seq("en"))
+    val t = freshDir("compact_noshuffle")
+    LakeTxn.appendCommit(spark, Tables.documents(spark, sf).repartition(16), t)
+    val sc = spark.sparkContext
+    val shuffleBytes = new AtomicLong
+    val tasks = new AtomicLong
+    @volatile var drain: (Int, CountDownLatch) = (-1, new CountDownLatch(1))
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) {
+          tasks.incrementAndGet()
+          shuffleBytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+        }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") ==
+            "lakespec-drain")) drain = (e.jobId, drain._2)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == drain._1) drain._2.countDown()
+    }
+    // listener events arrive asynchronously but in order: once a marker
+    // job's end is seen, every event posted before it has been delivered
+    def drained(): Unit = {
+      drain = (-1, new CountDownLatch(1))
+      sc.setJobDescription("lakespec-drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(drain._2.await(60, TimeUnit.SECONDS), "listener bus never drained")
+    }
+    sc.addSparkListener(listener)
+    try {
+      drained()
+      shuffleBytes.set(0L); tasks.set(0L)
+      LakeTxn.compactCommit(spark, t, (liveBytes(t) + 1) / 2)
+      drained()
+      // the marker job's own task is one of them
+      assert(tasks.get > 1, s"compaction ran no tasks (${tasks.get})")
+      assert(shuffleBytes.get == 0L, s"compaction shuffled ${shuffleBytes.get} bytes")
+    } finally sc.removeSparkListener(listener)
+    assert(LakeTxn.snapshot(spark, t).files.size == 2)
   }
 
   test("compact of a tiny table still emits at least one file") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("lake_compact_one").toString
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v").repartition(8).write.parquet(s"$base/frag")
-    val stats = ext.Lake.compact(spark, s"$base/frag", s"$base/packed", 1L << 30)
-    assert(stats.filesAfter == 1)
-    assert(spark.read.parquet(s"$base/packed").count() == 2)
+    val t = freshDir("compact_one")
+    LakeTxn.appendCommit(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "v").repartition(8), t)
+    LakeTxn.compactCommit(spark, t, 1L << 30)
+    assert(LakeTxn.snapshot(spark, t).files.size == 1)
+    assert(LakeTxn.read(spark, t).count() == 2)
   }
 }

@@ -88,6 +88,30 @@ class LakeTimestampSpec extends SparkSpec {
       "the un-stamped prefix resolves at (or before) the suffix's first stamp")
   }
 
+  test("a first action line past 64 KB keeps its in-commit timestamp") {
+    import spark.implicits._
+    val t = freshDir("wide")
+    build3(t)
+    // an append whose add carries a ~96 KB advisory bloom blob: the
+    // stamp closes a first line far past 64 KB
+    val staged = LakeTxn.stage(spark,
+      (100L until 110L).map(k => (k, k)).toDF("k", "v").repartition(1), t)
+    val blob = java.util.Base64.getEncoder.encodeToString(new Array[Byte](72 * 1024))
+    val v = LakeTxn.commit(spark, t,
+      staged.map(_.copy(bloomCol = "k", bloom = blob)), Nil)
+    val log = java.nio.file.Paths.get(t, "_graft_log", f"$v%020d.json")
+    val body = new String(java.nio.file.Files.readAllBytes(log), UTF_8)
+    assert(body.takeWhile(_ != '\n').length > (1 << 16))
+    val ts = LakeTxn.commitTimestamp(spark, t, v)
+    assert(ts.isDefined, "the stamp past 64 KB was dropped")
+    // move the commit file's mtime far past the stamp: resolution must
+    // still answer from the stamp
+    java.nio.file.Files.setLastModifiedTime(log,
+      java.nio.file.attribute.FileTime.fromMillis(ts.get + 1000000L))
+    assert(LakeTxn.versionAtTimestamp(spark, t, ts.get) === v)
+    assert(LakeTxn.read(spark, t).count() === 40L)
+  }
+
   test("a wall-clock step backwards clamps monotonically at resolution") {
     val t = freshDir("clock")
     build3(t)

@@ -229,20 +229,23 @@ class LakeTxnSpec extends SparkSpec {
 
   test("sorted write: manifest prunes files; content survives exactly") {
     import spark.implicits._
-    val dir = freshDir("sorted")
+    val t = freshDir("sorted")
     val df = (0 until 4000).map(i => ((i * 2654435761L) % 100000L, i.toLong))
       .toDF("k", "v")
-    val manifest = ext.Lake.sortedWrite(spark, df, dir, "k", 8)
-    assert(manifest.size == 8)
-    // range bands are disjoint across files (sorted by name = key order)
+    LakeTxn.appendCommitStats(spark,
+      df.repartitionByRange(8, col("k")).sortWithinPartitions("k"), t, "k")
+    // the manifest is the per-file min/max the log recorded at write time
+    val manifest = LakeTxn.snapshot(spark, t).adds.sortBy(_.lo)
+    assert(manifest.size == 8 && manifest.forall(_.statsCol == "k"))
+    // range bands are disjoint across files
     manifest.sliding(2).foreach {
       case Seq(a, b) => assert(a.hi <= b.lo, s"$a overlaps $b")
       case _ =>
     }
     assert(manifest.map(_.rows).sum == 4000L)
     // a narrow band scans strictly fewer files than the table holds
-    val (pruned, scanned) = ext.Lake.prunedRead(spark, manifest, "k", 10000L, 20000L)
-    assert(scanned < 8, s"no pruning: scanned $scanned of 8")
+    val (pruned, scanned, total) = LakeTxn.readPruned(spark, t, "k", 10000L, 20000L)
+    assert(total == 8 && scanned < 8, s"no pruning: scanned $scanned of $total")
     val want = df.filter(col("k") >= 10000L && col("k") <= 20000L)
       .orderBy("k", "v").collect().toSeq
     assert(pruned.orderBy("k", "v").collect().toSeq === want)

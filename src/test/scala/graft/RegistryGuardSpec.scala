@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.types._
 
-/** Registry-wide output-schema guards over EVERY `SparkEntry.queries`
-  * entry, constructed (not executed) at sf0.001.
+/** Registry-wide guards over EVERY `SparkEntry.queries` entry,
+  * constructed (not executed) at sf0.001: output schemas, and no
+  * persistent table left behind in the session catalog.
   *
   * The load-bearing one: no query may OUTPUT a precision-38 decimal
   * column. Round 11/12 proved the correctness harness cannot
@@ -24,14 +25,34 @@ class RegistryGuardSpec extends SparkSpec {
     case _ => Nil
   }
 
+  private def persistentTables(): Set[String] =
+    spark.catalog.listTables("default").collect()
+      .filterNot(_.isTemporary).map(_.name).toSet
+
+  /** Every entry constructed once, in name order: (persistent tables
+    * before, output schemas, persistent tables after). */
+  private lazy val built = {
+    val before = persistentTables()
+    val schemas = SparkEntry.queries.toSeq.sortBy(_._1)
+      .map { case (name, fn) => name -> fn(spark, sf).schema }
+    (before, schemas, persistentTables())
+  }
+
   test("no query outputs a precision-38 decimal column") {
-    val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val offenders = fn(spark, sf).schema.fields
+    val bad = built._2.flatMap { case (name, schema) =>
+      schema.fields
         .flatMap(f => decimals(f.dataType).filter(_.precision >= 38)
           .map(d => s"$name.${f.name}: $d"))
-      offenders
     }
     assert(bad.isEmpty, s"precision-38 decimal output columns: $bad")
+  }
+
+  test("constructing every query registers no persistent catalog table") {
+    // a query's side tables belong in its own lake warehouse; one left in
+    // the session catalog outlives the query and piles up per call
+    val (before, _, after) = built
+    assert(after -- before == Set.empty[String],
+      s"persistent tables left in the session catalog: ${after -- before}")
   }
 
   test("every query has an oracle or is a documented rows-only sketch") {

@@ -3,9 +3,10 @@ package graft
 import graft.ext.Zorder
 import org.apache.spark.sql.functions._
 
-/** Z-order clustering: interleave correctness, the box-bound property
-  * pruning relies on, and an end-to-end clustered write whose box scan
-  * actually prunes directories. */
+/** Z-order clustering: interleave correctness and the box-bound
+  * property pruning relies on. The clustered write and its box pruning
+  * are covered through the commit log by LakeSkipSpec
+  * (`appendCommitZorder` / `optimizeZorder`). */
 class ZorderSpec extends SparkSpec {
   import spark.implicits._
 
@@ -34,31 +35,5 @@ class ZorderSpec extends SparkSpec {
       val z = Zorder.zOf(x, y, 8)
       assert(z >= lo && z <= hi, s"z($x,$y)=$z outside [$lo,$hi]")
     }
-  }
-
-  test("clustered write: box scan prunes directories and stays correct") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder").toString
-    val pts = (0 until 1000)
-      .map(i => (i.toLong, (i * 7919L) % 256, (i * 104729L) % 256))
-      .toDF("id", "x", "y")
-    Zorder.writeClustered(pts, dir, col("x"), col("y"), bits = 8, bucketBits = 4)
-
-    val (x1, y1, x2, y2) = (0L, 0L, 63L, 63L) // one quadrant-ish box
-    val (b1, b2) = Zorder.boxBuckets(x1, y1, x2, y2, bits = 8, bucketBits = 4)
-    val back = spark.read.parquet(dir)
-    val pruned = back
-      .filter(col("zbucket").between(b1, b2))
-      .filter(col("x").between(x1, x2) && col("y").between(y1, y2))
-
-    // answer identical to the unclustered filter
-    val expect = pts.filter(col("x").between(x1, x2) && col("y").between(y1, y2))
-      .select("id").as[Long].collect().sorted.toSeq
-    assert(pruned.select("id").as[Long].collect().sorted.toSeq == expect)
-
-    // and the zbucket predicate reached the scan as a partition filter
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("zbucket"), plan.take(2000))
-    // the box needs only a prefix of the 16 directories
-    assert(b2 - b1 + 1 < 16, s"box should prune buckets, got [$b1,$b2]")
   }
 }
