@@ -1,7 +1,7 @@
 package graft.apps
 
 import graft.text.Tokenize
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Inverted index — the reference's second application (`map_id`/`reduce_id`,
@@ -47,14 +47,18 @@ object InvertedIndex {
       .groupBy("word", "doc")
       .agg(count(lit(1)).as("cnt"))
       .groupBy("word")
-      .agg(map_from_entries(array_sort(collect_list(struct(col("doc"), col("cnt")))))
-        .as("postings"))
+      .agg(postingsAgg(col("doc"), col("cnt")).as("postings"))
       .orderBy("word")
+
+  /** Aggregate of one group's (doc, cnt) rows into a MAP<doc, cnt> whose
+    * entries are sorted by doc. Docs must already be distinct per group. */
+  def postingsAgg(doc: Column, cnt: Column): Column =
+    map_from_entries(array_sort(collect_list(struct(doc, cnt))))
 
   /** Canonical JSON rendering of a MAP<doc, cnt> postings column:
     * entries re-sorted by doc so the string is deterministic regardless of
     * the map's internal entry order. */
-  def postingsToJson(postings: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  def postingsToJson(postings: Column): Column =
     to_json(map_from_entries(array_sort(map_entries(postings))))
 
   /** [[postings]] with the map rendered as canonical JSON (`{"doc":cnt,…}`

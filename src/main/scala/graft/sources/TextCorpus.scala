@@ -8,16 +8,19 @@ import org.apache.spark.sql.functions._
   * write the `word - [value]` text sink (reference `KeyValueStore.py:27-32`,
   * `MapReduce.py:161-162`). The colon-separated-file-list + whole-file-read protocol of
   * the reference becomes multi-path `spark.read.text` with per-line rows
-  * (equivalent under whitespace tokenization) and provenance from
-  * `input_file_name()`. */
+  * (equivalent under whitespace tokenization) and provenance from the
+  * file-source `_metadata.file_name` column. */
 object TextCorpus {
 
   /** Read text files (any mix of paths/globs) as (text, source) rows;
-    * `source` is the originating file name (the reference's doc id). */
+    * `source` is the originating file name (the reference's doc id).
+    * `_metadata.file_name` is URL-encoded (`a b.txt` reads `a%20b.txt`),
+    * so it is decoded; a literal `+` is left unencoded by the path and is
+    * escaped first so the decode keeps it. */
   def read(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.textFile(paths: _*)
+    spark.read.text(paths: _*)
       .select(col("value").as("text"),
-        element_at(split(input_file_name(), "/"), -1).as("source"))
+        url_decode(regexp_replace(col("_metadata.file_name"), "\\+", "%2B")).as("source"))
 
   /** Write the reference's final.txt shape: `word - [value]` lines,
     * totally ordered (the canonical fix of its nondeterministic append

@@ -46,7 +46,7 @@ class AppsSpec extends SparkSpec {
     assert(viaReg == direct)
   }
 
-  test("registry inverted index (typed Aggregator) == postings") {
+  test("registry inverted index (two native aggregates) == postings") {
     val direct = InvertedIndex.postings(corpus)
       .as[(String, Map[String, Long])].collect().toMap
     val viaReg = MapReduce.run(corpus, "map_id", "reduce_id")

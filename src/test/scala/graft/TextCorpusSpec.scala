@@ -3,10 +3,14 @@ package graft
 import graft.core.MapReduce
 import graft.sources.TextCorpus
 import java.nio.file.Files
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 /** End-to-end reference pipeline: raw text files in, `word - [n]` lines
   * out, matching hand-computed counts; plus the parallelism knobs. */
-class TextCorpusSpec extends SparkSpec {
+class TextCorpusSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   test("wordCountJob: files -> formatted final output") {
@@ -38,6 +42,28 @@ class TextCorpusSpec extends SparkSpec {
       mapParallelism = 5, reduceParallelism = 3)
       .as[(String, Long)].collect().toSeq
     assert(knobbed == base)
+    val idBase = MapReduce.run(corpus, "map_id", "reduce_id")
+      .as[(String, Map[String, Long])].collect().toSeq
+    val idKnobbedDf = MapReduce.run(corpus, "map_id", "reduce_id",
+      mapParallelism = 5, reduceParallelism = 3)
+    assert(idKnobbedDf.as[(String, Map[String, Long])].collect().toSeq == idBase)
+    // hashpartitioning(key) from the reduce knob satisfies both the
+    // (key, doc) and the key grouping: no exchange between the two
+    val plan = MapReduceSpec.finalPlan(idKnobbedDf)
+    def grouping(keys: String*): BaseAggregateExec = collectFirst(plan) {
+      case a: BaseAggregateExec if a.groupingExpressions.map(_.name) == keys => a
+    }.getOrElse(fail(s"no aggregate on ${keys.mkString(", ")}\n$plan"))
+    def exchangesUnder(p: SparkPlan): Int = collect(p) { case e: ShuffleExchangeExec => e }.size
+    assert(exchangesUnder(grouping("key")) == exchangesUnder(grouping("key", "doc")), plan.toString)
+  }
+
+  test("read names each row by its file's real name, not the URL-encoded path") {
+    val dir = Files.createTempDirectory("graft_names")
+    val names = Seq("a b%c.txt", "a+b.txt", "é.txt")
+    names.foreach(n => Files.writeString(dir.resolve(n), "word\n"))
+    val got = TextCorpus.read(spark, names.map(n => s"$dir/$n"))
+      .select("source").as[String].collect().toSet
+    assert(got == names.toSet)
   }
 
   test("partitioned parquet sink prunes at read time") {
