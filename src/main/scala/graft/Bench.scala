@@ -34,6 +34,12 @@ object Bench {
   private def f3s(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
+  /** The file a run writes its complete record to, also named by the
+    * printed line: a `SPARK_GRAFT_ONLY` subset run must not replace the
+    * committed full record. */
+  def recordFile(only: Option[Set[String]]): String =
+    if (only.isEmpty) "BENCH_FULL.json" else "BENCH_SUBSET.json"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -199,7 +205,7 @@ object Bench {
       }
     }
 
-    // Complete record (full precision + per-query ok) → BENCH_FULL.json.
+    // Complete record (full precision + per-query ok) → recordFile(only).
     // "failed" is the SAME shape (name array) as the printed stdout line;
     // the count gets its own key so no consumer can misparse the two.
     val failedArr = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
@@ -209,8 +215,9 @@ object Bench {
       val oks = results.map { case (k, _, ok) => "\"" + k + "\":" + ok }.mkString("{", ",", "}")
       s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"n_ok":$nOk,"queries":$qs,"ok":$oks,"n_failed":${failed.size},"failed":$failedArr,"regressed":$regressedArr,"sf":"$sfDir"}"""
     }
+    val fullFile = recordFile(only)
     java.nio.file.Files.write(
-      java.nio.file.Paths.get(if (only.isEmpty) "BENCH_FULL.json" else "BENCH_SUBSET.json"),
+      java.nio.file.Paths.get(fullFile),
       fullJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
     // Printed line: fixed header + as many per-query entries as fit in the
@@ -219,7 +226,7 @@ object Bench {
     def line(entries: Seq[(String, Double)]): String = {
       val qs = entries.sortBy(_._1)
         .map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","n":${results.size},"n_ok":$nOk,"queries":$qs,"failed":$failedArr,"regressed":$regressedArr,"full":"BENCH_FULL.json","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f3(total)},"unit":"sec","n":${results.size},"n_ok":$nOk,"queries":$qs,"failed":$failedArr,"regressed":$regressedArr,"full":"$fullFile","sf":"$sfDir"}"""
     }
     val byCost = results.sortBy(-_._2).map(r => (r._1, r._2))
     var keep = byCost.length

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{DotProduct, NfcNormalize, NfkcNormalize, PolyHash, TokenShingles, TokenizeText}
+import graft.functions.{DotProduct, MinHashSignature, NfcNormalize, NfkcNormalize, PolyHash, TokenShingles, TokenizeText}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -14,9 +14,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * SparkSession.builder().withExtensions(new GraftExtensions) ...
   * }}}
   *
-  * After which `poly_hash`, `dot_product`, `tokenize_text` and
-  * `token_shingles(text, k)` resolve in SQL on every session of the
-  * application (the per-session alternative is
+  * After which `poly_hash`, `dot_product`, `tokenize_text`,
+  * `token_shingles(text, k)`, `minhash_signature(hashes, n)`,
+  * `nfc_normalize` and `nfkc_normalize` resolve in SQL on every session
+  * of the application (the per-session alternative is
   * [[graft.functions.registerSql]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -32,6 +33,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       exprs => TokenizeText(exprs.head)))
     e.injectFunction(fn("token_shingles", classOf[TokenShingles], exprs =>
       TokenShingles(exprs.head,
+        exprs(1).eval().asInstanceOf[Number].intValue())))
+    e.injectFunction(fn("minhash_signature", classOf[MinHashSignature], exprs =>
+      MinHashSignature(exprs.head,
         exprs(1).eval().asInstanceOf[Number].intValue())))
     e.injectFunction(fn("nfc_normalize", classOf[NfcNormalize],
       exprs => NfcNormalize(exprs.head)))

@@ -15,7 +15,7 @@ object Plans {
     "q_join_agg" -> "shuffled join on the key; AQE re-plans at runtime",
     "q_topk" -> "TakeOrderedAndProject: per-partition top-k, k-row merge",
     "sim_topk" -> "query side broadcast; corpus scanned once",
-    "dedup_minhash" -> "one aggregation; 8 min columns ride one shuffle",
+    "dedup_minhash" -> "one projection per doc (signature kernel); only the final sort exchanges",
     "q_asof_join" -> "equi-join + range filter + max_by partial-agg argmax",
     "q_multi_join" -> "6-table chain: facts shuffled on keys, dims broadcast",
     "text_vocab" -> "two-phase global ranking: range exchange + pid-keyed window; no SinglePartition stage",

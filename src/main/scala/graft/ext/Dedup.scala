@@ -13,8 +13,10 @@ import graft.core.Checkpoints.Pinnable
   * Scale design (the 100 TB story):
   *  - exact dedup groups on a 256-bit content hash, so the shuffle carries
   *    (hash, id) pairs — never the document text;
-  *  - MinHash signatures are built with ONE aggregation over shingle rows
-  *    (map-side partial min), giving one fixed-width row per document;
+  *  - MinHash state is computed in ONE row per document: the shingle
+  *    array is built once, folded into its signature by a codegen'd
+  *    kernel and hashed for the Jaccard verify in the same projection —
+  *    shingles never become rows, so no shuffle carries them;
   *  - LSH banding turns all-pairs comparison into an equi-join on
   *    (band, band_hash) — candidates only, never n²;
   *  - SimHash near-dup search uses the pigeonhole block trick: pairs within
@@ -30,7 +32,7 @@ import graft.core.Checkpoints.Pinnable
 object Dedup {
 
   val P: Long = 1000000007L // base-hash modulus (prime, < 2^30)
-  val P2: Long = 2038074743L // signature-hash modulus (prime, < 2^31)
+  val P2: Long = graft.functions.TextKernels.MinHashP2 // signature-hash modulus (prime, < 2^31)
 
   /** Portable rolling hash: fold codepoints, h = (h*31 + cp) mod P.
     * Reproducible in any engine with a sequential list fold; compiled to a
@@ -136,45 +138,47 @@ object Dedup {
   // MinHash + LSH
 
   /** Affine re-hash family over the base hash: h_i(x) = (a_i·x + b_i) mod P2.
-    * Seeds are a fixed deterministic family shared with the SQL oracle. */
-  def seedFamily(numHashes: Int): Seq[(Int, Long, Long)] =
-    (0 until numHashes).map(i => (i, 2L * i + 1, (314159L * (i + 1)) % P2))
-
-  /** One aggregation computing every minhash as its own min column:
-    * (id, mh0 … mh{H-1}). All H minima ride ONE shuffle of one row per
-    * (partition, doc) — no seed join, map-side partial min. */
-  private def minhashAggFromShingles(sh: DataFrame, numHashes: Int,
-                                     baseHash: Column => Column,
-                                     idCol: String): DataFrame = {
-    val mins = seedFamily(numHashes).map { case (i, a, b) =>
-      min((lit(a) * col("bh") + lit(b)) % P2).as(s"mh$i")
-    }
-    sh.withColumn("bh", pmod(baseHash(col("shingle")), lit(P)))
-      .groupBy(col(idCol))
-      .agg(mins.head, mins.tail: _*)
+    * Seeds are a fixed deterministic family shared with the SQL oracle and
+    * with the signature kernel ([[graft.functions.TextKernels.minhashSignature]]). */
+  def seedFamily(numHashes: Int): Seq[(Int, Long, Long)] = {
+    import graft.functions.TextKernels.{minhashA, minhashB}
+    (0 until numHashes).map(i => (i, minhashA(i), minhashB(i)))
   }
 
-  private def minhashAgg(docs: DataFrame, k: Int, numHashes: Int,
-                         baseHash: Column => Column,
-                         textCol: String, idCol: String): DataFrame =
-    minhashAggFromShingles(shingleRows(docs, k, textCol, idCol), numHashes, baseHash, idCol)
+  /** The one MinHash path: (id, sig, sh_h), one row per document with
+    * non-null text. `token_shingles` runs once per document; its array
+    * feeds both the signature kernel (`sig`, H slots of
+    * min h_i(pmod(baseHash(s), P))) and the verify hashes (`sh_h`, the
+    * xxhash64 of each distinct shingle). Signature-only consumers never
+    * read `sh_h`, and column pruning drops it from their plans. `idCol`
+    * is a key: each input row is one document. */
+  private def signatureRows(docs: DataFrame, k: Int, numHashes: Int,
+                            baseHash: Column => Column,
+                            textCol: String, idCol: String): DataFrame =
+    docs.where(col(textCol).isNotNull)
+      .select(col(idCol), graft.functions.token_shingles(col(textCol), k).as("__sh"))
+      .select(col(idCol),
+        graft.functions.minhash_signature(
+          transform(col("__sh"), s => pmod(baseHash(s), lit(P))), numHashes).as("sig"),
+        transform(col("__sh"), s => xxhash64(s)).as("sh_h"))
 
-  /** MinHash signatures in flat form: (id, h_idx, minhash). */
+  /** MinHash signatures in flat form: (id, h_idx, minhash). The slots are
+    * zipped with their index before the explode: a generator over the bare
+    * `sig` attribute makes the optimizer infer `size(sig) > 0` and push it
+    * below the projection, computing every signature twice. */
   def minhashFlat(docs: DataFrame, k: Int = 3, numHashes: Int = 8,
                   baseHash: Column => Column = xxHash,
                   textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    minhashAgg(docs, k, numHashes, baseHash, textCol, idCol)
-      .select(col(idCol),
-        posexplode(array((0 until numHashes).map(i => col(s"mh$i")): _*)))
-      .select(col(idCol), col("pos").cast("long").as("h_idx"), col("col").as("minhash"))
+    minhashSignature(docs, k, numHashes, baseHash, textCol, idCol)
+      .select(col(idCol), inline(transform(col("sig"),
+        (v, i) => struct(i.cast("long").as("h_idx"), v.as("minhash")))))
       .orderBy(idCol, "h_idx")
 
   /** Signature as one array column per doc (internal for banding). */
   def minhashSignature(docs: DataFrame, k: Int = 3, numHashes: Int = 64,
                        baseHash: Column => Column = xxHash,
                        textCol: String = "text", idCol: String = "doc_id"): DataFrame =
-    minhashAgg(docs, k, numHashes, baseHash, textCol, idCol)
-      .select(col(idCol), array((0 until numHashes).map(i => col(s"mh$i")): _*).as("sig"))
+    signatureRows(docs, k, numHashes, baseHash, textCol, idCol).select(col(idCol), col("sig"))
 
   /** LSH banding: (band, band_hash, id) — docs sharing a band bucket are
     * near-dup candidates. band_hash folds the band's r minhash values. */
@@ -255,10 +259,13 @@ object Dedup {
     *
     * Scale design: exact-equal texts (the dominant duplicate class in web
     * corpora) are collapsed to one representative by content hash BEFORE
-    * the LSH/verify machinery runs — signatures, banding and the shingle
-    * verify join all touch distinct texts only. Pairs are then expanded
-    * back: within-group pairs are Jaccard 1.0 by construction; cross-group
-    * pairs inherit their representatives' Jaccard. */
+    * the LSH/verify machinery runs — signatures, banding and the verify
+    * joins all touch distinct texts only. Each representative is ONE
+    * pinned row (id, signature, shingle-hash array); banding reads the
+    * signature and the verify joins each candidate pair to its two rows
+    * and intersects the arrays. Pairs are then expanded back: within-group
+    * pairs are Jaccard 1.0 by construction; cross-group pairs inherit
+    * their representatives' Jaccard. */
   def minhashNearDuplicates(docs: DataFrame, threshold: Double = 0.7, k: Int = 3,
                             numHashes: Int = 64, bands: Int = 16,
                             baseHash: Column => Column = xxHash,
@@ -270,7 +277,12 @@ object Dedup {
     * the clustering consumers read: they feed the pair list straight
     * into a checkpoint/aggregate, and a global sort of the pair list
     * would execute inside that pin for nothing (the graded pair query
-    * adds its own orderBy). */
+    * adds its own orderBy).
+    *
+    * Construction pins two frames: the content-hash groups and ONE
+    * (id, sig, sh_h) row per representative ([[signatureRows]]). No
+    * shingle becomes a row, so the shuffles after the pins carry band
+    * keys, pair ids and per-document hash arrays — never shingle rows. */
   private[graft] def minhashNearDupPairs(docs: DataFrame, threshold: Double, k: Int,
                             numHashes: Int, bands: Int,
                             baseHash: Column => Column,
@@ -286,14 +298,12 @@ object Dedup {
       .select("ids", "rep")
       .pinCheckpoint()
     val reps = docs.join(groups.select(col("rep").as(idCol)), Seq(idCol), "left_semi")
-    // the rep shingle set feeds BOTH the signature/banding chain and the
-    // exact-Jaccard verify — materialize it once (also flattens the
-    // lineage the clustering loop above this op iterates over)
-    val sh = shingleRows(reps, k, textCol, idCol).pinCheckpoint()
-    val sig = minhashAggFromShingles(sh, numHashes, baseHash, idCol)
-      .select(col(idCol), array((0 until numHashes).map(i => col(s"mh$i")): _*).as("sig"))
-    val cands = candidatesFromSignatures(sig, bands, idCol)
-    val repPairs = jaccardOfPairs(cands, sh, idCol)
+    // one row per rep feeds BOTH the banding chain and the exact-Jaccard
+    // verify — materialize it once (also flattens the lineage the
+    // clustering loop above this op iterates over)
+    val rows = signatureRows(reps, k, numHashes, baseHash, textCol, idCol).pinCheckpoint()
+    val cands = candidatesFromSignatures(rows, bands, idCol)
+    val repPairs = jaccardOfPairs(cands, rows, idCol)
       .filter(col("jaccard") >= threshold)
     // No broadcast hint: `groups` is one row per DISTINCT text — near
     // corpus-sized for a mostly-unique web corpus, far past the 8 GB hard
@@ -473,25 +483,32 @@ object Dedup {
       .groupBy("cluster_id").agg(min(col(idCol)).as(idCol))
       .select(idCol).orderBy(idCol)
 
-  /** Exact Jaccard for given (a, b) pairs from shingle rows. Shingles are
-    * joined by 64-bit hash, not string — a fixed-8-byte exchange key
-    * instead of variable-length text (collision odds ~n²/2^64). */
-  def jaccardOfPairs(pairs: DataFrame, shingleRows: DataFrame,
-                     idCol: String = "doc_id"): DataFrame = {
-    val hashed = shingleRows.select(col(idCol), xxhash64(col("shingle")).as("sh_h"))
-    val sizes = hashed.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
-    val inter = pairs
-      .join(hashed.select(col(idCol).as("a"), col("sh_h")), "a")
-      .join(hashed.select(col(idCol).as("b"), col("sh_h")), Seq("b", "sh_h"))
-      .groupBy("a", "b").agg(count(lit(1)).as("inter"))
-    pairs.join(inter, Seq("a", "b"), "left")
-      .na.fill(0L, Seq("inter"))
-      .join(sizes.select(col(idCol).as("a"), col("sz").as("sa")), "a")
-      .join(sizes.select(col(idCol).as("b"), col("sz").as("sb")), "b")
-      .select(col("a"), col("b"),
-        (col("inter").cast("double") / (col("sa") + col("sb") - col("inter")))
-          .as("jaccard"))
-  }
+  /** Exact Jaccard for given (a, b) pairs: two equi-joins of the pairs
+    * against one row per document carrying `sh_h`, the array of its
+    * distinct shingles' xxhash64 (the form [[minhashNearDupPairs]] pins),
+    * then |A∩B| = size(array_intersect) and |A∪B| = |A| + |B| − |A∩B| per
+    * pair row. Shingles are compared by 64-bit hash, not string (collision
+    * odds ~n²/2^64); only the pairs and the hash arrays cross a shuffle.
+    * Pairs whose ids have no row are dropped. */
+  def jaccardOfPairs(pairs: DataFrame, shingleHashes: DataFrame,
+                     idCol: String = "doc_id"): DataFrame =
+    verifyPairs(pairs, "a", shingleHashes, "b", shingleHashes, idCol)
+      .select("a", "b", "jaccard")
+
+  /** (left, right, inter, s_left, s_right, jaccard) for each pair of
+    * `pairs`, with each side's `sh_h` array joined from its own table. */
+  private def verifyPairs(pairs: DataFrame, left: String, leftHashes: DataFrame,
+                          right: String, rightHashes: DataFrame,
+                          idCol: String): DataFrame =
+    pairs
+      .join(leftHashes.select(col(idCol).as(left), col("sh_h").as("__hl")), left)
+      .join(rightHashes.select(col(idCol).as(right), col("sh_h").as("__hr")), right)
+      .select(col(left), col(right),
+        size(array_intersect(col("__hl"), col("__hr"))).cast("long").as("inter"),
+        size(col("__hl")).cast("long").as(s"s_$left"),
+        size(col("__hr")).cast("long").as(s"s_$right"))
+      .withColumn("jaccard", col("inter").cast("double") /
+        (col(s"s_$left") + col(s"s_$right") - col("inter")))
 
   // ------------------------------------------------------------------
   // exact n-gram Jaccard (no approximation; inverted shingle join)
@@ -633,36 +650,27 @@ object Dedup {
     * persisted in a real deployment — only the batch side is new work per
     * ingest); the sides meet in an equi-join on (band, band_hash), so
     * cost scales with bucket co-occupancy across the sides, never
-    * |corpus|·|batch|. The exact-Jaccard verify join is keyed on shingle
-    * hashes — document text never crosses the shuffle. Compose
+    * |corpus|·|batch|. Each side is one pinned row per document (id,
+    * signature, shingle-hash array); the exact-Jaccard verify joins each
+    * candidate pair to its two rows and intersects the hash arrays —
+    * document text never crosses the shuffle. Compose
     * [[exactKeepIds]] in front when the batch is internally duplicated. */
   def crossCorpusNearDups(corpus: DataFrame, batch: DataFrame, threshold: Double = 0.7,
                           k: Int = 3, numHashes: Int = 64, bands: Int = 16,
                           baseHash: Column => Column = xxHash,
                           textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
-    // each side's shingles feed both the signature chain and the verify
-    // join — materialize once per side
-    val shC = shingleRows(corpus, k, textCol, idCol).pinCheckpoint()
-    val shB = shingleRows(batch, k, textCol, idCol).pinCheckpoint()
-    def bandSide(sh: DataFrame, out: String) = {
-      val sig = minhashAggFromShingles(sh, numHashes, baseHash, idCol)
-        .select(col(idCol), array((0 until numHashes).map(i => col(s"mh$i")): _*).as("sig"))
-      lshBands(sig, bands, idCol).select(col("band"), col("band_hash"), col(idCol).as(out))
-    }
-    val cands = bandSide(shC, "corpus_id")
-      .join(bandSide(shB, "batch_id"), Seq("band", "band_hash"))
+    // each side's rows feed both the banding chain and the verify join
+    // — materialize once per side
+    val rowsC = signatureRows(corpus, k, numHashes, baseHash, textCol, idCol).pinCheckpoint()
+    val rowsB = signatureRows(batch, k, numHashes, baseHash, textCol, idCol).pinCheckpoint()
+    def bandSide(rows: DataFrame, out: String) =
+      lshBands(rows, bands, idCol).select(col("band"), col("band_hash"), col(idCol).as(out))
+    val cands = bandSide(rowsC, "corpus_id")
+      .join(bandSide(rowsB, "batch_id"), Seq("band", "band_hash"))
       .select("corpus_id", "batch_id").distinct()
-    val hc = shC.select(col(idCol).as("corpus_id"), xxhash64(col("shingle")).as("sh_h"))
-    val hb = shB.select(col(idCol).as("batch_id"), xxhash64(col("shingle")).as("sh_h"))
-    val szC = hc.groupBy("corpus_id").agg(count(lit(1)).as("s_corpus"))
-    val szB = hb.groupBy("batch_id").agg(count(lit(1)).as("s_batch"))
-    cands.join(hc, "corpus_id").join(hb, Seq("batch_id", "sh_h"))
-      .groupBy("corpus_id", "batch_id").agg(count(lit(1)).as("inter"))
-      .join(szC, "corpus_id").join(szB, "batch_id")
+    verifyPairs(cands, "corpus_id", rowsC, "batch_id", rowsB, idCol)
       .select(col("corpus_id"), col("batch_id"), col("inter"),
-        col("s_corpus"), col("s_batch"),
-        (col("inter").cast("double") / (col("s_corpus") + col("s_batch") - col("inter")))
-          .as("jaccard"))
+        col("s_corpus_id").as("s_corpus"), col("s_batch_id").as("s_batch"), col("jaccard"))
       .filter(col("jaccard") >= threshold)
       .orderBy("corpus_id", "batch_id")
   }

@@ -59,10 +59,10 @@ object Graph {
     // One materialization: rounds re-read block-manager rows, not the
     // token stream; also cuts the per-round lineage (the Dedup.clusters
     // convention for iterative plans).
-    val edgesW = edges.join(outW, "src").pinCheckpoint(eager = false)
+    val edgesW = edges.join(outW, "src").pinCheckpoint()
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))
-      .distinct().pinCheckpoint(eager = false)
+      .distinct().pinCheckpoint()
     val n = nodes.count() // driver scalar: node count (metadata-scale)
     if (n == 0) // empty edge set: empty result with the right shape
       return nodes.select(col("node"), lit(0L).as("rank_scaled"))
@@ -152,10 +152,10 @@ object Graph {
     // both directions for propagation; one materialization feeds every round
     val sym = und.select(col("a").as("src"), col("b").as("dst"))
       .union(und.select(col("b").as("src"), col("a").as("dst")))
-      .pinCheckpoint(eager = false)
+      .pinCheckpoint()
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))
-      .distinct().pinCheckpoint(eager = false)
+      .distinct().pinCheckpoint()
     var labels = nodes.select(col("node"), col("node").as("label"))
     var lastCp: DataFrame = null
     for (i <- 1 to iters) {

@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass text kernels, shared by interpreted eval and generated code
@@ -133,8 +134,6 @@ object TextKernels {
     new GenericArrayData(arr)
   }
 
-  /** text -> distinct k-token shingles (first-occurrence order); documents
-    * shorter than k collapse to one whole-text shingle. */
   /** NFC canonical normalization; identity (no allocation, input
     * returned as-is) when already normalized. */
   def nfc(u: UTF8String): UTF8String = {
@@ -152,6 +151,8 @@ object TextKernels {
       java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFKC))
   }
 
+  /** text -> distinct k-token shingles (first-occurrence order); documents
+    * shorter than k collapse to one whole-text shingle. */
   def shingles(u: UTF8String, k: Int): ArrayData = {
     val toks = tokenListU(u)
     val seen = new java.util.LinkedHashSet[String]()
@@ -177,6 +178,45 @@ object TextKernels {
     var i = 0
     while (it.hasNext) { arr(i) = UTF8String.fromString(it.next()); i += 1 }
     new GenericArrayData(arr)
+  }
+
+  /** Signature-hash modulus of the MinHash seed family (prime, < 2^31). */
+  val MinHashP2: Long = 2038074743L
+
+  /** Multiplier a_i and offset b_i of the i-th MinHash seed:
+    * h_i(x) = (a_i·x + b_i) mod P2, a_i = 2i+1, b_i = 314159·(i+1) mod P2. */
+  def minhashA(i: Int): Long = 2L * i + 1
+  def minhashB(i: Int): Long = (314159L * (i + 1)) % MinHashP2
+
+  /** base hashes -> MinHash signature: slot i holds the min over the
+    * array's non-null x of h_i(x), in one pass over the array. Defined for
+    * x in [0, 2^31) (callers pass `pmod(hash, P)`), where a_i·x + b_i
+    * cannot overflow for any plausible numHashes; a slot nothing reached
+    * (empty array) holds Long.MaxValue, the identity of min. */
+  def minhashSignature(xs: ArrayData, numHashes: Int): ArrayData = {
+    val a = new Array[Long](numHashes)
+    val b = new Array[Long](numHashes)
+    val mins = new Array[Long](numHashes)
+    var i = 0
+    while (i < numHashes) {
+      a(i) = minhashA(i); b(i) = minhashB(i); mins(i) = Long.MaxValue
+      i += 1
+    }
+    val n = xs.numElements()
+    var j = 0
+    while (j < n) {
+      if (!xs.isNullAt(j)) {
+        val x = xs.getLong(j)
+        i = 0
+        while (i < numHashes) {
+          val h = (a(i) * x + b(i)) % MinHashP2
+          if (h < mins(i)) mins(i) = h
+          i += 1
+        }
+      }
+      j += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(mins)
   }
 }
 
@@ -237,6 +277,28 @@ case class TokenNgrams(child: Expression, k: Int) extends UnaryExpression {
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.ngrams($c, $k)")
   override protected def withNewChildInternal(newChild: Expression): TokenNgrams =
+    copy(child = newChild)
+}
+
+/** Column expression: the MinHash signature of one document's base-hash
+  * array (see [[TextKernels.minhashSignature]]) — the H-slot min that an
+  * aggregate over one row per shingle would compute, folded in one loop
+  * over the row's own array, so shingles never become rows. */
+case class MinHashSignature(child: Expression, numHashes: Int)
+    extends UnaryExpression {
+  require(numHashes > 0, s"numHashes must be positive, got $numHashes")
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"minhash_signature expects array<bigint>, got ${t.catalogString}")
+  }
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override protected def nullSafeEval(input: Any): Any =
+    TextKernels.minhashSignature(input.asInstanceOf[ArrayData], numHashes)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      c => s"graft.functions.TextKernels.minhashSignature($c, $numHashes)")
+  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
     copy(child = newChild)
 }
 

@@ -27,6 +27,11 @@ package object functions {
   def token_shingles(c: Column, k: Int): Column =
     ExpressionUtils.column(TokenShingles(ExpressionUtils.expression(c), k))
 
+  /** Codegen'd MinHash signature of a base-hash array (see
+    * [[MinHashSignature]]). */
+  def minhash_signature(baseHashes: Column, numHashes: Int): Column =
+    ExpressionUtils.column(MinHashSignature(ExpressionUtils.expression(baseHashes), numHashes))
+
   /** Codegen'd non-distinct k-grams from raw text (see [[TokenNgrams]]). */
   def token_ngrams(c: Column, k: Int): Column =
     ExpressionUtils.column(TokenNgrams(ExpressionUtils.expression(c), k))
@@ -60,6 +65,9 @@ package object functions {
         exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
     reg.createOrReplaceTempFunction(
       "token_ngrams", exprs => TokenNgrams(exprs.head,
+        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
+    reg.createOrReplaceTempFunction(
+      "minhash_signature", exprs => MinHashSignature(exprs.head,
         exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
     reg.createOrReplaceTempFunction(
       "nfc_normalize", exprs => NfcNormalize(exprs.head), "built-in")

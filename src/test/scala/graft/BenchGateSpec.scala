@@ -54,4 +54,9 @@ class BenchGateSpec extends AnyFunSuite {
     assert(Bench.parseBaseline("not json at all") == (("", Map.empty)))
     assert(Bench.parseBaseline("""{"queries": {}}""") == (("", Map.empty)))
   }
+
+  test("a subset run names the record file it writes, not BENCH_FULL.json") {
+    assert(Bench.recordFile(None) == "BENCH_FULL.json")
+    assert(Bench.recordFile(Some(Set("dedup_minhash"))) == "BENCH_SUBSET.json")
+  }
 }

@@ -155,6 +155,93 @@ class DedupSpec extends SparkSpec {
     assert(fast(8L) == 0L && fast(11L) == 9L && fast(12L) == 12L)
   }
 
+  test("minhash signatures == the exploded per-shingle min aggregate, both base hashes") {
+    for ((name, h) <- Seq("xxhash64" -> (Dedup.xxHash _), "poly_hash" -> (Dedup.polyHash _))) {
+      val got = Dedup.minhashSignature(corpus, numHashes = 64, baseHash = h)
+        .as[(Long, Seq[Long])].collect().toMap
+      val want = MinHashReference.signatures(corpus, 3, 64, h)
+        .as[(Long, Seq[Long])].collect().toMap
+      assert(got == want, s"signature kernel diverged from the reference under $name")
+    }
+  }
+
+  test("array-intersect verify == shingle-row Jaccard on every near-dup pair") {
+    val exact = Dedup.ngramJaccardPairs(corpus).select("a", "b", "jaccard")
+      .as[(Long, Long, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
+    val pairs = Dedup.minhashNearDuplicates(corpus, threshold = 0.1)
+      .select("a", "b", "jaccard").as[(Long, Long, Double)].collect()
+    assert(pairs.nonEmpty)
+    pairs.foreach { case (a, b, j) => assert(j == exact((a, b)), s"($a, $b): $j") }
+    // a document with no text has no signature row, and no pair
+    val withNull = corpus.union(Seq((9L, null: String)).toDF("doc_id", "text"))
+    assert(Dedup.minhashSignature(withNull).filter(col("doc_id") === 9L).count() == 0)
+  }
+
+  test("MinHash paths never turn shingles into rows: no GenerateExec over token_shingles") {
+    import org.apache.spark.sql.execution.{GenerateExec, ProjectExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.functions.TokenShingles
+    // every executed plan, including the eager pins inside construction
+    val captured = new java.util.concurrent.CopyOnWriteArrayList[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        captured.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def expand(p: SparkPlan): Seq[SparkPlan] = {
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case r: ReusedExchangeExec => Seq(r.child)
+        case other => other.children
+      }
+      p +: kids.flatMap(expand)
+    }
+    val batch = Seq((7L, base.replace("lazy", "idle")), (8L, "nothing in common here at all"))
+      .toDF("doc_id", "text")
+    spark.listenerManager.register(listener)
+    try {
+      Dedup.minhashNearDupPairs(corpus, 0.5, 3, 64, 16, Dedup.xxHash, "text", "doc_id").collect()
+      Dedup.crossCorpusNearDups(corpus, batch, 0.4).collect()
+      Dedup.minhashSignature(corpus).collect()
+      org.apache.spark.sql.graft.ListenerBusDrain(spark)
+    } finally spark.listenerManager.unregister(listener)
+    val nodes = captured.toArray(Array.empty[SparkPlan]).toSeq.flatMap(expand)
+    assert(nodes.nonEmpty)
+    // shingle arrays by name too, in case a projection below the generator aliases them
+    val shingleAttrs = nodes.collect { case p: ProjectExec => p.projectList }.flatten
+      .filter(_.exists(_.isInstanceOf[TokenShingles])).map(_.exprId).toSet
+    val offenders = nodes.collect {
+      case g: GenerateExec if g.generator.exists {
+        case _: TokenShingles => true
+        case a: org.apache.spark.sql.catalyst.expressions.Attribute => shingleAttrs(a.exprId)
+        case _ => false
+      } => g
+    }
+    assert(offenders.isEmpty, s"shingles exploded into rows:\n${offenders.mkString("\n")}")
+  }
+
+  test("minhashFlat evaluates the signature kernel once per document") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
+    }).flatMap(nodes)
+    // read from files: over a local relation the optimizer would evaluate
+    // the projection (and any filter pushed into it) at planning time
+    val dir = java.nio.file.Files.createTempDirectory("graft_minhash_flat").resolve("docs").toString
+    corpus.write.parquet(dir)
+    val flat = Dedup.minhashFlat(spark.read.parquet(dir))
+    flat.collect()
+    val kernels = nodes(flat.queryExecution.executedPlan)
+      .flatMap(_.expressions.flatMap(_.collect { case m: graft.functions.MinHashSignature => m }))
+    assert(kernels.size == 1, s"signature kernel appears ${kernels.size} times in the plan")
+  }
+
   test("minhash signature is invariant under repartitioning") {
     val s1 = Dedup.minhashFlat(corpus, numHashes = 8).collect().toSeq
     val s2 = Dedup.minhashFlat(corpus.repartition(7), numHashes = 8)

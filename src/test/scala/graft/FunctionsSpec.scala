@@ -148,6 +148,74 @@ class FunctionsSpec extends SparkSpec {
       assert(fast == slow, s"mismatch on '$t'") }
   }
 
+  test("minhash_signature: codegen'd == interpreted == exploded-aggregate reference") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    import graft.ext.Dedup.P
+    val rnd = new scala.util.Random(17)
+    val inputs: Seq[(Long, Array[Long])] = Seq(
+      0L -> Array(5L), // one element
+      1L -> Array(0L),
+      2L -> Array(7L, 7L, 7L, 3L, 3L), // repeated values
+      3L -> Array(P - 1, P - 2, P - 1, P - 3), // values near P
+      4L -> Array(P - 1),
+      5L -> Array.fill(300)((rnd.nextDouble() * P).toLong))
+    val ref = graft.functions.MinHashSignature(
+      BoundReference(0, ArrayType(LongType, containsNull = false), nullable = true), 1)
+    for (n <- Seq(1, 2, 8, 64)) {
+      val expr = ref.copy(numHashes = n)
+      val codegen = GenerateUnsafeProjection.generate(Seq(expr))
+      val want = MinHashReference.fromBaseHashRows(
+          inputs.flatMap { case (id, xs) => xs.map(x => (id, x)) }.toDF("doc_id", "bh"), n)
+        .as[(Long, Seq[Long])].collect().toMap
+      val viaPlan = inputs.toDF("doc_id", "bh")
+        .select(col("doc_id"), graft.functions.minhash_signature(col("bh"), n))
+        .as[(Long, Seq[Long])].collect().toMap
+      for ((id, xs) <- inputs) {
+        val row = InternalRow(ArrayData.toArrayData(xs))
+        val interpreted = expr.eval(row).asInstanceOf[ArrayData].toLongArray().toSeq
+        val generated = codegen(row).getArray(0).toLongArray().toSeq
+        assert(interpreted.size == n)
+        assert(generated == interpreted, s"codegen != interpreted for doc $id, n=$n")
+        assert(interpreted == want(id), s"kernel != reference aggregate for doc $id, n=$n")
+        assert(viaPlan(id) == want(id), s"whole-stage plan != reference for doc $id, n=$n")
+      }
+    }
+    // empty array: every slot is min's identity; null input stays null
+    val empty = InternalRow(ArrayData.toArrayData(Array.empty[Long]))
+    assert(ref.copy(numHashes = 3).eval(empty).asInstanceOf[ArrayData].toLongArray().toSeq ==
+      Seq.fill(3)(Long.MaxValue))
+    assert(ref.eval(InternalRow(null)) == null)
+    // SQL: registered, and rejects a non-bigint array
+    graft.functions.registerSql(spark)
+    assert(spark.sql("SELECT minhash_signature(array(CAST(5 AS BIGINT)), 2) AS s")
+      .as[Seq[Long]].head() ==
+      graft.ext.Dedup.seedFamily(2).map { case (_, a, b) => (a * 5L + b) % graft.ext.Dedup.P2 })
+    intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT minhash_signature(array('x'), 2)").collect())
+  }
+
+  test("every function GraftExtensions injects resolves through registerSql on a plain session") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    def names(s: org.apache.spark.sql.SparkSession): Set[String] =
+      s.sessionState.functionRegistry.listFunction().map(_.funcName).toSet
+    val plain = names(spark.newSession())
+    val extended = spark.newSession()
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new graft.GraftExtensions().apply(ext)
+    org.apache.spark.sql.graft.bridge.applyFunctionExtensions(ext, extended)
+    val injected = names(extended) -- plain
+    assert(injected.contains("minhash_signature") && injected.size >= 7, s"injected: $injected")
+    val viaSql = spark.newSession()
+    graft.functions.registerSql(viaSql)
+    val missing = injected.filterNot(n =>
+      viaSql.sessionState.functionRegistry.functionExists(FunctionIdentifier(n)))
+    assert(missing.isEmpty, s"injected by GraftExtensions but not by registerSql: $missing")
+  }
+
   test("registry rejects unknown mapper/reducer names") {
     val df = Seq(("s", "t")).toDF("source", "text")
     intercept[RuntimeException](graft.core.MapReduce.run(df, "nope", "reduce_wc"))

@@ -59,6 +59,34 @@ class GraphSpec extends SparkSpec {
     assert(und.forall { case (a, b) => lpa(a) == lpa(b) })
   }
 
+  test("reliable checkpoints evaluate the pinned edge frame once per row") {
+    // a lazy reliable checkpoint computes its frame for the first job and
+    // again when it writes the checkpoint files; eager pins compute it once
+    val evals = spark.sparkContext.longAccumulator("graph_edge_evals")
+    val tagged = udf { (s: String) => evals.add(1); s }
+    val raw = Seq(("a", "b", 1L), ("b", "c", 2L), ("c", "a", 1L), ("c", "d", 1L), ("d", "b", 3L))
+      .toDF("src", "dst", "w")
+    // the exchange keeps the optimizer from folding the udf into the local
+    // relation at planning time, so every count below is an execution
+    val edges = raw.repartition(2).select(col("src"), tagged(col("dst")).as("dst"), col("w"))
+    val dir = java.nio.file.Files.createTempDirectory("graft_graph_ckpt").toString
+    spark.conf.set(graft.core.Checkpoints.ConfKey, dir)
+    try {
+      val ranks = Graph.pageRank(edges, iters = 3).collect()
+      assert(ranks.length == 4)
+      // `dst` is read by two pins: the weighted edge frame and the node set
+      assert(evals.value == 2L * raw.count(),
+        s"${evals.value} evaluations of ${raw.count()} edge rows across the two pins")
+      evals.reset()
+      Graph.labelPropagation(edges, 2).collect()
+    } finally spark.conf.unset(graft.core.Checkpoints.ConfKey)
+    // label propagation's pins: no more evaluations than the local strategy makes
+    val reliable = evals.value
+    evals.reset()
+    Graph.labelPropagation(edges, 2).collect()
+    assert(reliable == evals.value, s"reliable $reliable vs local ${evals.value} evaluations")
+  }
+
   test("a hub fed by two spokes outranks the spokes") {
     val edges = Seq(
       ("s1", "hub", 1L), ("s2", "hub", 1L),
