@@ -6,6 +6,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.LakeDv
+
 /** Transactional lake table: a mini commit log over plain parquet files.
   *
   * The reference has no persistent table format at all (its chunk store
@@ -102,33 +104,45 @@ object LakeTxn {
   val SupportedWriterVersion = 1
 
   /** The TOMBSTONE BUDGET: the most live deletion-vector positions a
-    * table may carry. Readers collect the live vectors to the driver
-    * (small-metadata by the MoR contract), so the merge-on-read WRITERS
-    * refuse to push a table past this — failing the write loudly beats
-    * wedging every later scan until a compaction. Compaction and
+    * table may carry. Vectors are read and written in the driver
+    * process ([[LakeDv]]), so the budget bounds the driver memory of
+    * every DV'd scan plan and MoR write. It is enforced three times:
+    * a merge-on-read WRITER collects at most `budget − live + 1`
+    * positions and refuses before writing any file; [[commitAt]]
+    * re-checks at a head that moved; a READER checks the log's
+    * recorded vector sizes before opening one. Failing the write loudly
+    * beats wedging every later scan until a compaction. Compaction and
     * copy-on-write rewrites purge vectors and free the budget. */
   private[graft] val MaxDvPositions = 10_000_000L
 
-  /** Enforce the budget for a MoR write adding `dvAdds` tombstones on
-    * top of `snap`'s live vectors; on violation the staged files are
-    * deleted and the write aborts with the recovery paths named. */
-  private def guardDvBudget(spark: SparkSession, table: String,
-                            snap: Snapshot, dvAdds: Seq[Action],
-                            alsoStaged: Seq[Action] = Nil,
-                            maxPositions: Long = MaxDvPositions): Unit = {
-    val total = snap.dvs.map(_.rows).sum + dvAdds.map(_.rows).sum
-    if (total > maxPositions) {
-      val root = new Path(table)
-      val fs = fsOf(spark, root)
-      (dvAdds ++ alsoStaged).foreach(a =>
-        fs.delete(new Path(root, a.file), false))
-      throw new IllegalArgumentException(
-        s"merge-on-read write refused: $table would carry $total live " +
-          s"deletion-vector positions (> $maxPositions) — every later scan " +
-          s"would pay (and the V2 reader refuse) that tombstone list; " +
-          s"compact the table (purges vectors) or use the copy-on-write " +
-          s"path for deletes/updates this large")
-    }
+  /** The tombstone positions a MoR write adds: the `(__dv_file,
+    * __dv_pos)` columns of `matched`, collected to the driver by ONE
+    * Spark job (basename -> positions; empty when nothing matched). At
+    * most `room + 1` positions come back, where `room` is what the
+    * budget leaves over `snap`'s live vectors, so a write past it is
+    * refused here — before any file is written — with the recovery
+    * paths named. (`Dataset.limit` would cap the same way but scan the
+    * partitions in growing waves, one job each.) */
+  private def dvPositions(table: String, snap: Snapshot, matched: DataFrame,
+                          maxPositions: Long): Map[String, Array[Long]] = {
+    require(maxPositions < Int.MaxValue,
+      s"tombstone budget $maxPositions exceeds a driver collect")
+    val live = snap.dvs.map(_.rows).sum
+    val room = math.max(0L, maxPositions - live)
+    val cap = (room + 1).toInt
+    val got = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    matched.sparkSession.sparkContext.runJob(
+      matched.select(col("__dv_file"), col("__dv_pos")).rdd,
+      (it: Iterator[org.apache.spark.sql.Row]) =>
+        it.take(cap).map(r => (r.getString(0), r.getLong(1))).toArray,
+      (_: Int, part: Array[(String, Long)]) => got ++= part.take(cap - got.size))
+    if (got.size > room) throw new IllegalArgumentException(
+      s"merge-on-read write refused: $table would carry more than " +
+        s"$maxPositions live deletion-vector positions ($live live + at " +
+        s"least ${got.size} new) — every later scan would pay (and the " +
+        s"V2 reader refuse) that tombstone list; compact the table (purges " +
+        s"vectors) or use the copy-on-write path for deletes/updates this large")
+    got.groupBy(_._1).map { case (f, ps) => f -> ps.map(_._2).toArray }
   }
 
   private val LogDirName = "_graft_log"
@@ -573,7 +587,7 @@ object LakeTxn {
     * write-time skipping stats recorded into the add action. Blocks
     * with absent/empty/all-null stats contribute nothing; a file whose
     * every block lacks stats fails loudly rather than recording a lie. */
-  private def footerAction(spark: SparkSession, root: Path, rel: String,
+  private[graft] def footerAction(spark: SparkSession, root: Path, rel: String,
                            statsCol: String, statsCol2: String = null): Action =
     footerActionConf(spark.sessionState.newHadoopConf(), root.toString, rel,
       statsCol, statsCol2)
@@ -681,27 +695,25 @@ object LakeTxn {
   private[graft] def stage(spark: SparkSession, df: DataFrame,
                            table: String,
                            statsCol: String = null,
-                           dir: String = "data",
                            statsCol2: String = null): Seq[Action] = {
-    if (dir == "data") enforceConstraints(spark, df, table)
+    enforceConstraints(spark, df, table)
     val root = new Path(table)
     val fs = fsOf(spark, root)
     val batch = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
     val tmp = new Path(root, s".stage-$batch")
     df.write.parquet(tmp.toString)
-    fs.mkdirs(new Path(root, dir))
+    fs.mkdirs(new Path(root, "data"))
     val parts = fs.listStatus(tmp)
       .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
       .sortBy(_.getPath.getName)
     val rels = parts.zipWithIndex.map { case (s, i) =>
-      val rel = s"$dir/$batch-$i.parquet"
+      val rel = s"data/$batch-$i.parquet"
       require(fs.rename(s.getPath, new Path(root, rel)),
         s"failed to stage ${s.getPath} as $rel")
       rel
     }.toSeq
     fs.delete(tmp, true)
     footerActions(spark, root, rels, statsCol, statsCol2)
-      .map(_.copy(dv = dir == "dv"))
   }
 
   /** Wire form of a deletion vector's REFERENCED data-file basenames
@@ -726,18 +738,6 @@ object LakeTxn {
     Option(a.refs).map(r =>
       new String(java.util.Base64.getDecoder.decode(r), UTF_8)
         .split("\n").toSeq.filter(_.nonEmpty))
-
-  /** Stage a (__dv_file, __dv_pos) frame as deletion-vector files and
-    * stamp each add action with its referenced basenames — one
-    * driver-scale metadata read per staged vector (vectors are small by
-    * the MoR contract). Every DV this engine writes carries refs. */
-  private def stageDv(spark: SparkSession, positions: DataFrame,
-                      table: String): Seq[Action] =
-    stage(spark, positions, table, dir = "dv").map { a =>
-      val refs = spark.read.parquet(s"$table/${a.file}")
-        .select("__dv_file").distinct().collect().map(_.getString(0)).toSeq
-      a.copy(refs = encodeDvRefs(refs))
-    }
 
   /** Publish files a V2 writer staged, as ONE atomic commit: CHECK
     * constraints are enforced against the staged content first (a
@@ -840,29 +840,24 @@ object LakeTxn {
     * log-only exactness invariant (`LakeDv.rawRowsExact`) alive across
     * copy-on-write rewrites: the pushed COUNT(*) stays on the raw-sum
     * fast path and no reader ever carries stale positions. Refs come
-    * from the log when recorded (`"dr"`); reading a vector is a
-    * driver-scale parquet read (small by the MoR contract). Returns
+    * from the log when recorded (`"dr"`), else from the vector itself;
+    * vectors are read and shrunk on the driver ([[LakeDv]]). Returns
     * (shrunk vector adds, vector removes) for the SAME atomic commit. */
   private def rewriteDvs(spark: SparkSession, table: String,
                          dvs: Seq[Action],
                          removedBase: Set[String]): (Seq[Action], Seq[String]) =
     if (dvs.isEmpty || removedBase.isEmpty) (Nil, Nil)
     else {
+      val conf = spark.sessionState.newHadoopConf()
       val adds = Seq.newBuilder[Action]
       val removes = Seq.newBuilder[String]
       dvs.foreach { a =>
-        val refs = decodeDvRefs(a).getOrElse(
-          spark.read.parquet(s"$table/${a.file}")
-            .select("__dv_file").distinct().collect().map(_.getString(0)).toSeq)
+        lazy val positions = LakeDv.read(conf, table, a.file)
+        val refs = decodeDvRefs(a).getOrElse(positions.keys.toSeq)
         if (refs.exists(removedBase)) {
           removes += a.file
-          val surviving = refs.filterNot(removedBase)
-          if (surviving.nonEmpty)
-            adds ++= stageDv(spark,
-              spark.read.parquet(s"$table/${a.file}")
-                .filter(col("__dv_file").isin(surviving: _*))
-                .select(col("__dv_file"), col("__dv_pos"))
-                .repartition(1), table)
+          val surviving = positions.filter { case (f, _) => !removedBase(f) }
+          if (surviving.nonEmpty) adds += LakeDv.write(spark, table, surviving)
         }
       }
       (adds.result(), removes.result())
@@ -1146,10 +1141,12 @@ object LakeTxn {
     *    already excludes the winner's tombstones — naturally
     *    duplicate-free. Vectors on DISJOINT files commute;
     *  - a DV commit landing at a head that moved also re-checks the
-    *    TOMBSTONE BUDGET against the fresh snapshot (`dvBudget`):
+    *    TOMBSTONE BUDGET (`dvBudget`) against the head's live vectors:
     *    without this, two concurrent MoR writers each under budget at
     *    their own read version jointly push the table past it and wedge
-    *    every later scan at the read-side guard;
+    *    every later scan at the read-side guard. The head's vectors are
+    *    the live vectors at `readVersion` (one log fold per call) plus
+    *    the interleaved commits the loop already parsed;
     *  - a METADATA commit (schema action, constraint, protocol) aborts
     *    if any interleaved metadata commit landed: two concurrent ALTER
     *    TABLEs both compute from the same base, and last-writer-wins
@@ -1169,6 +1166,10 @@ object LakeTxn {
     val removeSet = removes.toSet
     val readDepSet = readDeps.toSet
     val ourDvs = adds.filter(a => a.add && a.dv)
+    // the live vectors at readVersion, which the budget re-check folds
+    // forward through the interleaved commits: one log fold, not one per retry
+    lazy val readDvs =
+      if (readVersion < 0) Nil else snapshot(spark, table, Some(readVersion)).dvs
     val metaCommit = adds.exists(_.schema) || extraLines.exists(l =>
       l.startsWith("""{"a":"constraint"""") ||
         l.startsWith("""{"a":"unconstraint"""") ||
@@ -1221,10 +1222,18 @@ object LakeTxn {
           }
           // budget re-check at the MOVED head: the writer's guard ran
           // against its own read version, but interleaved MoR commits
-          // may already have spent the tombstone budget. Vectors THIS
-          // commit unpins (a rewrite's shrink/purge) do not count.
-          val headDvRows = snapshot(spark, table).dvs
-            .filterNot(a => removeSet.contains(a.file)).map(_.rows).sum
+          // may already have spent the tombstone budget. The head's
+          // live vectors are the read version's folded through the
+          // interleaved commits parsed above. Vectors THIS commit
+          // unpins (a rewrite's shrink/purge) do not count.
+          val headDvs = scala.collection.mutable.LinkedHashMap
+            .from(readDvs.map(a => a.file -> a.rows))
+          interActs.foreach { a =>
+            if (!a.add) headDvs -= a.file
+            else if (a.dv) headDvs += a.file -> a.rows
+          }
+          val headDvRows = headDvs.collect {
+            case (f, rows) if !removeSet.contains(f) => rows }.sum
           val total = headDvRows + ourDvs.map(_.rows).sum
           if (total > dvBudget) throw new IllegalArgumentException(
             s"merge-on-read write refused at commit time: $table would carry " +
@@ -2115,8 +2124,13 @@ object LakeTxn {
 
   /** MERGE-ON-READ DELETE: rows matching `cond` are tombstoned by a
     * deletion vector — a parquet of (file basename, row position) pairs
-    * staged under `dv/` and pinned by ONE atomic commit — with ZERO
-    * data files rewritten (LakeTxnSpec pins the unchanged file set).
+    * under `dv/` pinned by ONE atomic commit — with ZERO data files
+    * rewritten (LakeTxnSpec pins the unchanged file set). One Spark job
+    * collects the matched positions (plus one to broadcast the live
+    * vectors when there are any); the vector is written on the driver
+    * ([[LakeDv.write]]). A delete that would push the table past the
+    * tombstone budget (`maxDvPositions`) is refused before any file is
+    * written.
     * This is the write-cheap half of the delete trade-off the
     * copy-on-write [[applyChanges]] path prices the other way: DV
     * deletes cost Θ(matched rows) at write and one small anti-join per
@@ -2138,13 +2152,12 @@ object LakeTxn {
       val snap = snapshot(spark, table)
       if (snap.files.isEmpty) -1L // empty table: nothing to tombstone
       else {
-        val doomed = scanWithDvsMeta(spark, table, snap, snap.files)
-          .filter(cond)
-          .select(col("__dv_file"), col("__dv_pos"))
+        val doomed = dvPositions(table, snap,
+          scanWithDvsMeta(spark, table, snap, snap.files).filter(cond),
+          maxDvPositions)
         if (doomed.isEmpty) -1L
         else {
-          val dvAdds = stageDv(spark, doomed.repartition(1), table)
-          guardDvBudget(spark, table, snap, dvAdds, maxPositions = maxDvPositions)
+          val dvAdds = Seq(LakeDv.write(spark, table, doomed))
           // readDeps = the files the positions reference: a compaction
           // that interleaved would have replaced them, and these
           // tombstones would point into files no reader opens — a
@@ -2200,17 +2213,15 @@ object LakeTxn {
         // (matched is small by the point-update contract)
         matched.cache()
         try {
-          if (matched.isEmpty) -1L
+          val positions = dvPositions(table, snap, matched, maxDvPositions)
+          if (positions.isEmpty) -1L
           else {
-            val positions = matched.select(col("__dv_file"), col("__dv_pos"))
             val rewritten = sets.foldLeft(matched) { case (df, (c, v)) =>
               df.withColumn(c, v)
             }.drop("__dv_file", "__dv_pos")
-            val dvAdds = stageDv(spark, positions.repartition(1), table)
+            val dvAdds = Seq(LakeDv.write(spark, table, positions))
             try {
               val dataAdds = stageDataLike(spark, rewritten, table, snap)
-              guardDvBudget(spark, table, snap, dvAdds, alsoStaged = dataAdds,
-                maxPositions = maxDvPositions)
               try commitAt(spark, table, snap.version, dvAdds ++ dataAdds, Nil,
                 readDeps = snap.files, dvBudget = maxDvPositions)
               catch { case t: Throwable =>
@@ -2244,8 +2255,9 @@ object LakeTxn {
     val base = baseScan(spark, table, snap, files, withMeta = true)
     if (snap.dvs.isEmpty) base
     else {
-      val dv = spark.read.parquet(snap.dvs.map(a => s"$table/${a.file}"): _*)
-        .select(col("__dv_file"), col("__dv_pos"))
+      // explicit schema: no inference job over the vector files
+      val vectors = snap.dvs.map(a => s"$table/${a.file}")
+      val dv = spark.read.schema(LakeDv.DvSchema).parquet(vectors: _*)
       base.join(broadcast(dv), Seq("__dv_file", "__dv_pos"), "left_anti")
     }
   }
@@ -2499,21 +2511,19 @@ object LakeTxn {
         val base = scanWithDvsMeta(spark, table, snap, snap.files)
         val cols = base.columns.filterNot(c => c == "__dv_file" || c == "__dv_pos").toSeq
         val keys = changes.select(col(keyCol)).distinct()
-        val positions = base.join(broadcast(keys), Seq(keyCol), "left_semi")
-          .select(col("__dv_file"), col("__dv_pos"))
+        val positions = dvPositions(table, snap,
+          base.join(broadcast(keys), Seq(keyCol), "left_semi"), maxDvPositions)
         val upserts = changes.filter(col(opCol) === "upsert").drop(opCol)
           .select(cols.map(col): _*)
         val dvAdds =
           if (positions.isEmpty) Nil
-          else stageDv(spark, positions.repartition(1), table)
+          else Seq(LakeDv.write(spark, table, positions))
         try {
           val dataAdds =
             if (upserts.isEmpty) Nil
             else stageDataLike(spark, upserts, table, snap)
           if (dvAdds.isEmpty && dataAdds.isEmpty) -1L
           else {
-            guardDvBudget(spark, table, snap, dvAdds, alsoStaged = dataAdds,
-              maxPositions = maxDvPositions)
             try commitAt(spark, table, snap.version, dvAdds ++ dataAdds, Nil,
               readDeps = snap.files, dvBudget = maxDvPositions)
             catch { case t: Throwable =>

@@ -8,10 +8,12 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.io.ColumnIOFactory
-import org.apache.parquet.schema.{MessageType, PrimitiveType}
+import org.apache.parquet.schema.{MessageType, MessageTypeParser, PrimitiveType}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -876,39 +878,134 @@ private[sources] object LakeParquetFilters {
   }
 }
 
-/** The ONE driver-side deletion-vector loader every scan path shares.
-  * Loading collects every live tombstone position to the driver, so it
-  * is guarded: a vector set past [[MaxDvPositions]] is no longer "small
-  * metadata" — the table owes a compaction, refuse loudly rather than
-  * ship an unbounded tombstone list into every task (or OOM the driver
-  * mid-UPDATE). */
+/** Deletion vectors: the ONE codec every vector read and write goes
+  * through, on the driver. A vector is a parquet file under `dv/` of
+  * `(__dv_file STRING, __dv_pos INT64)` pairs ([[DvSchema]]) — a data
+  * file's basename and a tombstoned row ordinal in it. Vectors are
+  * bounded metadata ([[MaxDvPositions]]), so they are read with
+  * parquet-hadoop's `ParquetReader` and written with its
+  * `ExampleParquetWriter` in the driver process: no Spark job, no
+  * query planning, no schema inference. The one Spark reader of vector
+  * files left is the merge-on-read WRITE scan's broadcast anti-join
+  * (`LakeTxn`), and it reads with the explicit [[DvSchema]].
+  *
+  * Loading is guarded: a vector set past [[MaxDvPositions]] is no
+  * longer "small metadata" — the table owes a compaction, so the load
+  * refuses loudly rather than ship an unbounded tombstone list into
+  * every task (or OOM the driver mid-UPDATE). The log decides: the
+  * recorded row counts are checked before any vector file opens. */
 private[graft] object LakeDv {
   /** One shared budget with the write side ([[LakeTxn.MaxDvPositions]]):
     * the MoR writers refuse to push a table past it, so this read-side
     * guard is the backstop for tables written by other means. */
   val MaxDvPositions = LakeTxn.MaxDvPositions
 
+  /** A vector's columns as Spark reads them. Vectors this engine writes
+    * store both as `required`; vectors written by a Spark
+    * `df.write.parquet` store them as `optional` and read the same. */
+  val DvSchema: StructType = StructType(Seq(
+    StructField("__dv_file", StringType), StructField("__dv_pos", LongType)))
+
+  private val DvMessage: MessageType = MessageTypeParser.parseMessageType(
+    "message spark_schema { required binary __dv_file (STRING); " +
+      "required int64 __dv_pos; }")
+
+  private def overBudget(table: String, n: Long, maxPositions: Long): String =
+    s"$table carries $n deletion-vector positions (> $maxPositions): " +
+      s"compact the table (purges vectors) before scanning"
+
   /** file basename -> sorted tombstoned row positions of the snapshot's
-    * live deletion vectors (empty map when none). `maxPositions` is
-    * parameterized only so specs can prove the guard without staging
-    * ten million tombstones. */
+    * live deletion vectors (empty map when none). The budget check reads
+    * the log's recorded counts before any vector opens; the running
+    * count re-checks it against a log that undercounts. Positions are
+    * distinct: stacked vectors may tombstone one row twice, and the
+    * array-cursor readers consume exactly one entry per ordinal.
+    * `maxPositions` is parameterized only so specs can prove the guard
+    * without staging ten million tombstones. */
   def load(spark: SparkSession, table: String, snap: LakeTxn.Snapshot,
            maxPositions: Long = MaxDvPositions): Map[String, Array[Long]] =
     if (snap.dvs.isEmpty) Map.empty
     else {
-      val rows = spark.read
-        .parquet(snap.dvs.map(a => s"$table/${a.file}"): _*)
-        .select(col("__dv_file"), col("__dv_pos"))
-      val n = rows.count()
-      require(n <= maxPositions,
-        s"$table carries $n deletion-vector positions (> $maxPositions): " +
-          s"compact the table (purges vectors) before scanning")
-      // distinct: stacked vectors may tombstone one row twice, and the
-      // array-cursor readers consume exactly one entry per ordinal
-      rows.collect()
-        .groupBy(_.getString(0))
-        .map { case (f, rs) => f -> rs.map(_.getLong(1)).distinct.sorted }
+      val logged = snap.dvs.map(_.rows).sum
+      require(logged <= maxPositions, overBudget(table, logged, maxPositions))
+      val conf = spark.sessionState.newHadoopConf()
+      val byFile = scala.collection.mutable.HashMap
+        .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
+      var n = 0L
+      snap.dvs.foreach { a =>
+        read(conf, table, a.file).foreach { case (f, ps) =>
+          n += ps.length
+          require(n <= maxPositions, overBudget(table, n, maxPositions))
+          byFile.getOrElseUpdate(f, new scala.collection.mutable.ArrayBuilder.ofLong) ++= ps
+        }
+      }
+      byFile.map { case (f, b) =>
+        val ps = b.result()
+        java.util.Arrays.sort(ps)
+        f -> ps.distinct
+      }.toMap
     }
+
+  /** One vector file's positions, grouped by data-file basename (file
+    * order within a basename). A null entry is a corrupt vector and
+    * fails loudly — dropping it would resurrect a deleted row. */
+  def read(conf: Configuration, table: String,
+           rel: String): Map[String, Array[Long]] = {
+    val reader = ParquetReader
+      .builder(new GroupReadSupport(), new Path(table, rel))
+      .withConf(conf).build()
+    val byFile = scala.collection.mutable.LinkedHashMap
+      .empty[String, scala.collection.mutable.ArrayBuilder.ofLong]
+    try {
+      var g = reader.read()
+      if (g != null) {
+        val fi = g.getType.getFieldIndex("__dv_file")
+        val pi = g.getType.getFieldIndex("__dv_pos")
+        while (g != null) {
+          if (g.getFieldRepetitionCount(fi) == 0 || g.getFieldRepetitionCount(pi) == 0)
+            throw new IllegalStateException(
+              s"deletion vector $table/$rel holds a null entry")
+          byFile.getOrElseUpdate(g.getString(fi, 0),
+            new scala.collection.mutable.ArrayBuilder.ofLong) += g.getLong(pi, 0)
+          g = reader.read()
+        }
+      }
+    } finally reader.close()
+    byFile.map { case (f, b) => f -> b.result() }.toMap
+  }
+
+  /** Write `positions` (basename -> row ordinals, non-empty) as ONE
+    * vector: the file is written under a `.stage-*` dot-temp directory
+    * (readers never list it; [[LakeTxn.vacuum]] reclaims a crashed
+    * one) and renamed into `dv/`. Returns its unpinned DV add action:
+    * rows and bytes from the written footer, refs (`"dr"`) from the
+    * basenames in hand. */
+  def write(spark: SparkSession, table: String,
+            positions: Map[String, Array[Long]]): LakeTxn.Action = {
+    require(positions.values.exists(_.nonEmpty), "empty deletion vector")
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(table)
+    val fs = root.getFileSystem(conf)
+    val batch = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+    val tmpDir = new Path(root, s".stage-$batch")
+    val tmp = new Path(tmpDir, "dv.parquet")
+    val rel = s"dv/$batch-0.parquet"
+    try {
+      val w = ExampleParquetWriter
+        .builder(HadoopOutputFile.fromPath(tmp, conf))
+        .withConf(conf).withType(DvMessage).build()
+      val gf = new SimpleGroupFactory(DvMessage)
+      try positions.toSeq.sortBy(_._1).foreach { case (f, ps) =>
+        ps.sorted.foreach(p =>
+          w.write(gf.newGroup().append("__dv_file", f).append("__dv_pos", p)))
+      } finally w.close()
+      fs.mkdirs(new Path(root, "dv"))
+      require(fs.rename(tmp, new Path(root, rel)),
+        s"failed to publish deletion vector $tmp as $rel")
+    } finally fs.delete(tmpDir, true)
+    LakeTxn.footerAction(spark, root, rel, null).copy(dv = true,
+      refs = LakeTxn.encodeDvRefs(positions.filter(_._2.nonEmpty).keys.toSeq))
+  }
 
   /** True when Σ raw DV cardinalities provably equals the live
     * tombstone count from the LOG alone: every live vector records its

@@ -36,6 +36,12 @@ class LakeDvConcurrencySpec extends SparkSpec {
     (df.collect().head.getLong(0), df.queryExecution.executedPlan.toString)
   }
 
+  /** A vector of the `(__dv_file, __dv_pos)` rows of `doomed`, written
+    * (unpinned) by the driver codec; its refs name the files it hits. */
+  private def vectorOf(t: String, doomed: DataFrame): Seq[LakeTxn.Action] =
+    Seq(LakeDv.write(spark, t, doomed.collect()
+      .groupBy(_.getString(0)).map { case (f, rs) => f -> rs.map(_.getLong(1)) }))
+
   /** All live (basename, position) tombstone pairs, duplicates KEPT. */
   private def rawPairs(t: String): Seq[(String, Long)] = {
     val snap = LakeTxn.snapshot(spark, t)
@@ -84,10 +90,9 @@ class LakeDvConcurrencySpec extends SparkSpec {
       .withColumn("__dv_pos", col("_metadata.row_index"))
       .filter(col("k") === 8L)
       .select(col("__dv_file"), col("__dv_pos"))
-    val dvAdds = LakeTxn.stage(spark, doomed, t, dir = "dv").map { a =>
-      a.copy(refs = LakeTxn.encodeDvRefs(
-        Seq(LakeTxn.baseName(snap0.files.head))))
-    }
+    val dvAdds = vectorOf(t, doomed)
+    assert(LakeTxn.decodeDvRefs(dvAdds.head) ===
+      Some(Seq(LakeTxn.baseName(snap0.files.head))))
     val e = intercept[LakeTxn.CommitConflictException] {
       LakeTxn.commitAt(spark, t, snap0.version, dvAdds, Nil,
         readDeps = snap0.files)
@@ -107,8 +112,7 @@ class LakeDvConcurrencySpec extends SparkSpec {
         .withColumn("__dv_pos", col("_metadata.row_index"))
         .filter(col("k") >= lo && col("k") < hi)
         .select(col("__dv_file"), col("__dv_pos"))
-      LakeTxn.stage(spark, doomed, t, dir = "dv")
-        .map(_.copy(refs = LakeTxn.encodeDvRefs(Seq(LakeTxn.baseName(file)))))
+      vectorOf(t, doomed)
     }
     // 50 tombstones on A land first (within the 60 budget on their own)
     val dvA = dvFor(fileA, 0L, 50L)

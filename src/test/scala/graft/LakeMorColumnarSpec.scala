@@ -86,16 +86,24 @@ class LakeMorColumnarSpec extends SparkSpec {
     LakeTxn.appendCommit(spark, d.repartition(2), t)
     LakeTxn.deleteWhereMor(spark, t, col("k") < 8L) // 8 live tombstones
     val v = LakeTxn.listVersions(spark, t).last
+    // a refused write leaves no file behind: not in dv/, not in data/
+    def files(): Set[String] = Seq("dv", "data").flatMap(d =>
+      Option(new java.io.File(s"$t/$d").list()).toSeq.flatten.map(f => s"$d/$f")).toSet
+    val before = files()
+    assert(before.exists(_.startsWith("dv/")))
     // the next delete would carry 8 + 96 tombstones > the (test) budget
     val e = intercept[IllegalArgumentException](
       LakeTxn.deleteWhereMor(spark, t, col("k") % 2 === 0L, maxDvPositions = 100L))
     assert(e.getMessage.contains("compact the table"))
     assert(LakeTxn.listVersions(spark, t).last === v, "nothing may commit")
+    assert(files() === before, "a refused delete wrote files")
     // same budget on the MoR update and CDC apply
     intercept[IllegalArgumentException](LakeTxn.updateMorWhere(spark, t,
       col("k") >= 0L, Seq("v" -> lit("x")), maxDvPositions = 100L))
+    assert(files() === before, "a refused update wrote files")
     intercept[IllegalArgumentException](LakeTxn.applyChangesMor(spark, t,
       d.withColumn("__op", lit("delete")), "k", maxDvPositions = 100L))
+    assert(files() === before, "a refused CDC apply wrote files")
     assert(LakeTxn.listVersions(spark, t).last === v)
     // content intact, and a compaction frees the budget
     assert(LakeTxn.read(spark, t).count() === 192L)
@@ -149,8 +157,7 @@ class LakeMorColumnarSpec extends SparkSpec {
     val snap = LakeTxn.snapshot(spark, t)
     // an interleaved compaction replaces every file the snapshot read
     LakeTxn.compactCommit(spark, t, Long.MaxValue / 4)
-    val dv = Seq(("x.parquet", 0L)).toDF("__dv_file", "__dv_pos")
-    val dvAdds = LakeTxn.stage(spark, dv, t, dir = "dv")
+    val dvAdds = Seq(LakeDv.write(spark, t, Map("x.parquet" -> Array(0L))))
     intercept[LakeTxn.CommitConflictException](
       LakeTxn.commitAt(spark, t, snap.version, dvAdds, Nil,
         readDeps = snap.files))
