@@ -28,22 +28,18 @@ object Tables {
   }
 
   /** The events frame exactly as the parquet reader surfaces it, before
-    * the `ts` normalization. The nanos-as-long legacy flag is session-global,
-    * so it is set ONLY when the footer actually holds TIMESTAMP(NANOS)
-    * (detected by the failed first read) — never as an unconditional side
-    * effect that would change how every other file in the session reads. */
-  def rawEvents(s: SparkSession, d: String): DataFrame =
-    rawEventsWithNanosFlag(s, d)._1
-
-  /** [[rawEvents]] plus WHETHER the column is TIMESTAMP(NANOS) — the
-    * signal [[normalizeTs]] needs to tell a nanos-as-long column from a
+    * the `ts` normalization, plus WHETHER the column is TIMESTAMP(NANOS) —
+    * the signal [[normalizeTs]] needs to tell a nanos-as-long column from a
     * plain un-annotated INT64, which would otherwise be silently divided
     * by 1000 (the exact corruption class this loader exists to refuse).
-    * The detection reads the parquet FOOTER's logical-type annotation —
-    * never the exception path alone: once the session-global nanos
-    * legacy flag is set (by any earlier nanos load), later nanos files
-    * read without error and an exception-based attestation would be
-    * permanently lost for the rest of the session. */
+    * The nanos-as-long legacy flag is session-global, so it is set ONLY
+    * when the footer actually holds TIMESTAMP(NANOS) — never as an
+    * unconditional side effect that would change how every other file in
+    * the session reads. The detection reads the parquet FOOTER's
+    * logical-type annotation — never the exception path alone: once the
+    * session-global nanos legacy flag is set (by any earlier nanos load),
+    * later nanos files read without error and an exception-based
+    * attestation would be permanently lost for the rest of the session. */
   def rawEventsWithNanosFlag(s: SparkSession, d: String): (DataFrame, Boolean) = {
     val path = s"$d/events.parquet"
     val nanos = tsIsNanos(s, path)

@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.LakeDv
+import graft.sources.{LakeDv, ShippedConf}
 
 /** Transactional lake table: a mini commit log over plain parquet files.
   *
@@ -408,12 +408,6 @@ object LakeTxn {
     (acts.result(), txns.result(), govs.result())
   }
 
-  /** The governance actions of one commit. */
-  def readGov(spark: SparkSession, table: String, v: Long): Seq[Gov] = {
-    val p = commitFile(table, v)
-    parseActions(table, s"commit $v", readFileText(fsOf(spark, p), p))._3
-  }
-
   /** Parse one commit's action lines (idempotence markers skipped).
     * Malformed lines fail loudly — a corrupt log must never silently
     * drop a remove (double-count). */
@@ -660,12 +654,11 @@ object LakeTxn {
     if (rels.size <= DriverFooterCap)
       rels.map(footerAction(spark, root, _, statsCol, statsCol2))
     else {
-      val conf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf())
+      val conf = ShippedConf(spark)
       val rootStr = root.toString
       spark.sparkContext
         .parallelize(rels, math.min(rels.size, 64))
-        .map(rel => footerActionConf(conf.value, rootStr, rel, statsCol, statsCol2))
+        .map(rel => footerActionConf(conf.value.value, rootStr, rel, statsCol, statsCol2))
         .collect().toSeq
     }
 
@@ -1564,17 +1557,19 @@ object LakeTxn {
     require(cols.nonEmpty, "need at least one stats column")
     cols.foreach(c => require(df.columns.contains(c), s"no column '$c'"))
     val staged = stage(spark, df, table)
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
     // like footerActions: driver loop for small batches, one distributed
     // metadata pass above the cap (order preserved through collect)
     val sxs: Seq[String] =
-      if (staged.size <= DriverFooterCap)
-        staged.map(a => encodeSxBands(footerSx(conf.value, table, a.file, cols)))
-      else spark.sparkContext
-        .parallelize(staged.map(_.file), math.min(staged.size, 64))
-        .map(rel => encodeSxBands(footerSx(conf.value, table, rel, cols)))
-        .collect().toSeq
+      if (staged.size <= DriverFooterCap) {
+        val conf = spark.sessionState.newHadoopConf()
+        staged.map(a => encodeSxBands(footerSx(conf, table, a.file, cols)))
+      } else {
+        val conf = ShippedConf(spark)
+        spark.sparkContext
+          .parallelize(staged.map(_.file), math.min(staged.size, 64))
+          .map(rel => encodeSxBands(footerSx(conf.value.value, table, rel, cols)))
+          .collect().toSeq
+      }
     commit(spark, table, staged.lazyZip(sxs).map((a, s) => a.copy(sx = s)), Nil)
   }
 

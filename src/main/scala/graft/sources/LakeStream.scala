@@ -14,6 +14,7 @@ import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.{MessageType, MessageTypeParser, PrimitiveType}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -1139,8 +1140,7 @@ final class LakeBatch(table: String, schema: StructType,
     val columnar = schema.fields.forall(f =>
       LakeColumnarReader.atomicOk(f.dataType))
     new LakeReaderFactory(schema.json,
-      new SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf()),
+      ShippedConf(SparkSession.active),
       columnar, pushed)
   }
 }
@@ -1272,7 +1272,7 @@ final class LakeMicroBatchStream(table: String, schema: StructType,
     * any position are handled by the reader's vector reordering. */
   override def createReaderFactory(): PartitionReaderFactory =
     new LakeReaderFactory(schema.json,
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()),
+      ShippedConf(spark),
       columnar = schema.fields.forall(f => LakeColumnarReader.atomicOk(f.dataType)))
 
   override def commit(end: Offset): Unit = () // log retention is vacuum's concern
@@ -1317,16 +1317,20 @@ final case class LakeBucketPartition(files: Array[LakeInputPartition],
     new GenericInternalRow(Array[Any](bucketId))
 }
 
-/** `conf` is the DRIVER's session Hadoop configuration shipped to the
-  * executors ([[SerializableConfiguration]]) — a bare `new
-  * Configuration()` would drop `spark.hadoop.*` settings and filesystem
-  * credentials, which works on local FS and breaks on any configured
-  * object store. `columnar` routes every partition through the
+/** `conf` is the DRIVER's session Hadoop configuration, shipped to the
+  * executors as the [[ShippedConf]] broadcast (one per context and conf
+  * content, freed by Spark's `ContextCleaner` once no factory holds it):
+  * the task binary carries only the handle, each executor fetches the
+  * value once. A bare `new Configuration()` would drop `spark.hadoop.*`
+  * settings and filesystem credentials, which works on local FS and
+  * breaks on any configured object store. The value is shared across
+  * tasks: the columnar reader copies it before its own `set`s, the row
+  * reader only reads it. `columnar` routes every partition through the
   * vectorized batch reader (the caller guarantees all partitions
   * qualify — Spark refuses mixed modes); `pushed` feeds row-group
   * pruning inside the columnar reader. */
 final class LakeReaderFactory(schemaJson: String,
-                              conf: SerializableConfiguration,
+                              private[graft] val conf: Broadcast[SerializableConfiguration],
                               columnar: Boolean = false,
                               pushed: Array[Filter] = Array.empty)
     extends PartitionReaderFactory {
@@ -1365,7 +1369,7 @@ final class LakeReaderFactory(schemaJson: String,
         val p = partition.asInstanceOf[LakeInputPartition]
         val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
         new LakeColumnarReader(p.absPath, schema, p.injectedFor(schema),
-          pushed, conf.value, p.deleted)
+          pushed, conf.value.value, p.deleted)
     }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
@@ -1376,7 +1380,7 @@ final class LakeReaderFactory(schemaJson: String,
         val p = partition.asInstanceOf[LakeInputPartition]
         val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
         new LakeFileReader(p.absPath, schema, p.injectedFor(schema),
-          p.deleted, conf.value)
+          p.deleted, conf.value.value)
     }
 }
 
@@ -1422,6 +1426,8 @@ final class LakeColumnarReader(absPath: String, schema: StructType,
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
   import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
+  // a private copy for the `set`s below: `hadoopConf` is the broadcast
+  // value every task of the query shares
   private val conf = new Configuration(hadoopConf)
   private val injNames = injected.map(_._1)
   // the requested spark schema: everything except the injected constant
@@ -1553,11 +1559,13 @@ final class LakeColumnarReader(absPath: String, schema: StructType,
   * (`setRequestedSchema`). A column the file lacks (pre-evolution file
   * under an evolved stream schema) null-fills; a column the file has
   * but the schema doesn't (post-evolution file under a pinned older
-  * stream schema) is never read at all. */
+  * stream schema) is never read at all. `hadoopConf` is the shipped
+  * session conf, read only — no default: a bare `new Configuration()`
+  * would silently drop `spark.hadoop.*` settings and credentials. */
 final class LakeFileReader(absPath: String, schema: StructType,
-                           injected: Seq[(String, String)] = Nil,
-                           deleted: Array[Long] = Array.emptyLongArray,
-                           hadoopConf: Configuration = new Configuration())
+                           injected: Seq[(String, String)],
+                           deleted: Array[Long],
+                           hadoopConf: Configuration)
     extends PartitionReader[InternalRow] {
 
   private val reader = ParquetFileReader.open(
@@ -1786,8 +1794,7 @@ final class LakeRowLevelScan(op: LakeRowLevelOperation, table: String,
     val columnar = schema.fields.forall(f =>
       LakeColumnarReader.atomicOk(f.dataType))
     new LakeReaderFactory(schema.json,
-      new SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf()), columnar)
+      ShippedConf(SparkSession.active), columnar)
   }
 }
 
@@ -1803,8 +1810,7 @@ final class LakeReplaceDataWrite(table: String, schema: StructType,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new LakeWriterFactory(table, stageDir, schema.json,
-      new SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf()), pvCol)
+      ShippedConf(SparkSession.active), pvCol)
 
   private def dropStage(): Unit = {
     val p = new Path(table, stageDir)
@@ -1845,8 +1851,7 @@ final class LakeBatchWrite(table: String, schema: StructType, queryId: String,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new LakeWriterFactory(table, stageDir, schema.json,
-      new SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf()), pvCol)
+      ShippedConf(SparkSession.active), pvCol)
 
   private def dropStage(): Unit = {
     val p = new Path(table, stageDir)
@@ -1866,14 +1871,19 @@ final class LakeBatchWrite(table: String, schema: StructType, queryId: String,
   override def abort(messages: Array[WriterCommitMessage]): Unit = dropStage()
 }
 
+/** The executor half's factory. `conf` is the [[ShippedConf]] broadcast
+  * of the driver's session Hadoop configuration: cached per context and
+  * conf content, dropped from the cache when the content changes, freed
+  * by Spark's `ContextCleaner` once no factory holds it. The task binary
+  * carries only the handle; each writer only reads the shared value. */
 final class LakeWriterFactory(table: String, stageDir: String, schemaJson: String,
-                              conf: SerializableConfiguration,
+                              private[graft] val conf: Broadcast[SerializableConfiguration],
                               pvCol: Option[String] = None)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new LakeDataWriter(table, stageDir,
       DataType.fromJson(schemaJson).asInstanceOf[StructType], partitionId, taskId,
-      conf.value, pvCol = pvCol)
+      conf.value.value, pvCol = pvCol)
 }
 
 /** The driver half of an OVERWRITE: the read version pins at JOB START
@@ -1892,8 +1902,7 @@ final class LakeOverwriteBatchWrite(table: String, schema: StructType,
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new LakeWriterFactory(table, stageDir, schema.json,
-      new SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf()), pvCol)
+      ShippedConf(SparkSession.active), pvCol)
 
   private def dropStage(): Unit = {
     val p = new Path(table, stageDir)
@@ -1928,8 +1937,7 @@ final class LakeStreamingWrite(table: String, schema: StructType,
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
     new LakeStreamingWriterFactory(table, stageDir, schema.json,
-      new SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf()), pvCol)
+      ShippedConf(SparkSession.active), pvCol)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val ms = messages.collect { case m: LakeWriteCommit => m }
@@ -1949,16 +1957,20 @@ final class LakeStreamingWrite(table: String, schema: StructType,
   }
 }
 
+/** [[LakeWriterFactory]] for the streaming sink, one staged file set per
+  * epoch. `conf` is the same [[ShippedConf]] broadcast (cached per
+  * context and conf content, freed by Spark's `ContextCleaner` once no
+  * factory holds it); each writer only reads the shared value. */
 final class LakeStreamingWriterFactory(table: String, stageDir: String,
                                        schemaJson: String,
-                                       conf: SerializableConfiguration,
+                                       private[graft] val conf: Broadcast[SerializableConfiguration],
                                        pvCol: Option[String] = None)
     extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
     new LakeDataWriter(table, stageDir,
       DataType.fromJson(schemaJson).asInstanceOf[StructType], partitionId, taskId,
-      conf.value, suffix = s"-e$epochId", pvCol = pvCol)
+      conf.value.value, suffix = s"-e$epochId", pvCol = pvCol)
 }
 
 /** The executor half: rows of one partition → one staged parquet file
@@ -1968,10 +1980,12 @@ final class LakeStreamingWriterFactory(table: String, stageDir: String,
   * partition VALUE seen by this task, the column physically absent from
   * the files (hive layout; values ride the commit's add actions) —
   * NULL/empty values are refused up front, the
-  * `__HIVE_DEFAULT_PARTITION__` corruption guard. */
+  * `__HIVE_DEFAULT_PARTITION__` corruption guard. `hadoopConf` is the
+  * shipped session conf, read only, with no default (see
+  * [[LakeFileReader]]). */
 final class LakeDataWriter(table: String, stageDir: String, schema: StructType,
                            partitionId: Int, taskId: Long,
-                           hadoopConf: Configuration = new Configuration(),
+                           hadoopConf: Configuration,
                            suffix: String = "",
                            pvCol: Option[String] = None)
     extends DataWriter[InternalRow] {

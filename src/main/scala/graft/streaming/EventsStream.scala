@@ -29,12 +29,13 @@ object EventsStream {
     * The stream schema is DERIVED from a batch footer read — never pinned
     * to one physical parquet type. events.ts has shipped as
     * TIMESTAMP(NANOS), naive TIMESTAMP(MICROS), and UTC micros across
-    * testdata generations; [[graft.Tables.rawEvents]] surfaces whichever
-    * the footer holds (setting the nanos-as-long legacy flag only when
-    * actually needed) and [[graft.Tables.normalizeTs]] converts the stream
-    * to the same session-zoned micro-precision TimestampType contract the
-    * batch loader guarantees, so every downstream transform sees one ts
-    * type regardless of who wrote the file. */
+    * testdata generations; [[graft.Tables.rawEventsWithNanosFlag]]
+    * surfaces whichever the footer holds (setting the nanos-as-long legacy
+    * flag only when actually needed) and [[graft.Tables.normalizeTs]]
+    * converts the stream to the same session-zoned micro-precision
+    * TimestampType contract the batch loader guarantees, so every
+    * downstream transform sees one ts type regardless of who wrote the
+    * file. */
   def readEvents(spark: SparkSession, sfDir: String): DataFrame = {
     import java.nio.file.{Files, Paths}
     val src = Paths.get(s"$sfDir/events.parquet")
