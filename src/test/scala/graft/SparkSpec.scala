@@ -6,6 +6,14 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all suites (one JVM, forked by sbt). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Run `f` on the session [[GraftSession.build]] returns inside this
+    * JVM (a child of the shared one), then make the shared session this
+    * thread's active one again. */
+  def withGraftSession[T](master: String, shufflePartitions: Int)(f: SparkSession => T): T = {
+    val s = GraftSession.build(master, shufflePartitions)
+    try f(s) finally SparkSession.setActiveSession(spark)
+  }
 }
 
 object SparkSpec {

@@ -84,8 +84,9 @@ class TextCorpusSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("GraftSession builds with injected SQL functions") {
-    val s = GraftSession.build("local[2]", 2)
-    assert(s.sql("SELECT poly_hash('x')").head().getLong(0) == 'x'.toLong)
+    withGraftSession("local[2]", 2) { s =>
+      assert(s.sql("SELECT poly_hash('x')").head().getLong(0) == 'x'.toLong)
+    }
   }
 
   test("invertedIndexJob writes canonical postings lines") {
