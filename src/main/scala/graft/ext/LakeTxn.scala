@@ -5,8 +5,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
-import graft.sources.{LakeDv, ShippedConf}
+import graft.sources.{LakeDv, LakeStreamTable, ShippedConf}
 
 /** Transactional lake table: a mini commit log over plain parquet files.
   *
@@ -662,52 +663,218 @@ object LakeTxn {
         .collect().toSeq
     }
 
-  /** Stage `df` as immutable data files under `data/` and return their
-    * add actions (relative path + footer row count; per-file min/max of
-    * `statsCol` when given — the log-level data-skipping record).
-    * Staged files are INVISIBLE until some commit pins them. */
-  /** A write whose rows violate a live CHECK constraint. Thrown BEFORE
-    * any file is written — a violating batch leaves no trace. */
+  /** A write whose rows violate a live CHECK constraint. The check runs
+    * over the staged rows before any file is published ([[publishStaged]]):
+    * a violating batch's staged files are deleted and nothing commits. */
   final class ConstraintViolationException(msg: String) extends RuntimeException(msg)
 
-  /** Enforce the snapshot's CHECK constraints on a batch about to stage
-    * (SQL CHECK semantics: a row violates only when the expression is
-    * FALSE — NULL passes). One filter-count job per constraint; the
-    * Delta invariant-check shape. */
-  private def enforceConstraints(spark: SparkSession, df: DataFrame,
-                                 table: String): Unit = {
-    if (listVersions(spark, table).isEmpty) return
-    snapshot(spark, table).constraints.foreach { case (name, e) =>
-      val bad = df.filter(not(coalesce(expr(e).cast("boolean"), lit(true))))
-      if (!bad.isEmpty) throw new ConstraintViolationException(
-        s"CHECK constraint '$name' ($e) violated by the batch being " +
-          s"written to $table — nothing was staged or committed")
+  /** How a table lays its data files out. [[layoutOf]] decides it once
+    * per write and every writer — DataFrame and V2 alike — stages by it
+    * and [[publishStaged]] stamps it:
+    *  - `Plain`: files carry every column, adds carry no key;
+    *  - `Partitioned(col)`: one STRING value per file, the column
+    *    physically absent (hive layout) and recorded as `"pc"/"pv64"`;
+    *  - `Bucketed(key, n)`: one [[bucketId]] per file, the key kept in
+    *    the file and the id recorded as `"bkc"/"bkn"/"bki"`.
+    * A staged file's layout KEY is its partition value or its decimal
+    * bucket id (null on a plain table). */
+  sealed trait Layout extends Serializable {
+    /** The column the layout keys on. */
+    def column: Option[String] = this match {
+      case Plain => None
+      case Partitioned(pc) => Some(pc)
+      case Bucketed(k, _) => Some(k)
+    }
+
+    /** The columns a staged file physically carries. */
+    def fileSchema(schema: StructType): StructType = this match {
+      case Partitioned(pc) => StructType(schema.filterNot(_.name == pc))
+      case _ => schema
+    }
+
+    private[graft] def stamp(a: Action, key: String): Action = this match {
+      case Plain => a
+      case Partitioned(pc) => a.copy(pvCol = pc, pvValue = key)
+      case Bucketed(k, n) => a.copy(bkCol = k, bkN = n.toLong, bkId = key.toLong)
+    }
+  }
+  case object Plain extends Layout
+  final case class Partitioned(col: String) extends Layout
+  final case class Bucketed(key: String, n: Int) extends Layout
+
+  /** THE layout decision: the declared `PARTITIONED BY` column of the
+    * governing schema first, then a partition column every live file
+    * shares, then a `(key, n)` bucketing every live file shares; plain
+    * otherwise (a mixed table stays mixed — no writer guesses). */
+  def layoutOf(spark: SparkSession, table: String, snap: Snapshot): Layout = {
+    def uniform[K](k: Action => Option[K]): Option[K] =
+      snap.adds.map(k).distinct match {
+        case Seq(Some(v)) => Some(v)
+        case _ => None
+      }
+    tableSchema(spark, table, snap).flatMap(LakeStreamTable.pvColOf)
+      .orElse(uniform(a => Option(a.pvCol)))
+      .map(Partitioned(_))
+      .orElse(uniform(a => Option(a.bkCol).filter(_ => a.bkId >= 0).map((_, a.bkN.toInt)))
+        .map { case (k, n) => Bucketed(k, n) })
+      .getOrElse(Plain)
+  }
+
+  /** The latest snapshot, or an empty one before the first commit. */
+  private[graft] def headSnapshot(spark: SparkSession, table: String): Snapshot =
+    if (listVersions(spark, table).isEmpty) Snapshot(-1L, Nil)
+    else snapshot(spark, table)
+
+  private def newBatchId(): String =
+    java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+
+  /** The first of `constraints` some row of `rows` violates (SQL CHECK
+    * semantics: FALSE violates, NULL passes); one filter-count job per
+    * constraint — the Delta invariant-check shape. */
+  private def firstViolated(rows: DataFrame,
+                            constraints: Map[String, String]): Option[(String, String)] =
+    constraints.find { case (_, e) =>
+      !rows.filter(not(coalesce(expr(e).cast("boolean"), lit(true)))).isEmpty
+    }
+
+  /** THE publish step every writer shares. `staged` are files a writer
+    * left under a dot-dir of the table root (invisible to readers), each
+    * with its layout key; `schema` is the rows' logical schema. In order:
+    * the writer protocol gate and the CHECK constraints of `snap` —
+    * evaluated over the staged rows with a partition column put back as
+    * its per-file literal — then each file renames to a fresh
+    * `data/<batch>-<i>.parquet`, its footer gives the row count, size
+    * and optional `statsCol`/`statsCol2` band, and `layout` stamps its
+    * key. On any failure every staged and already-renamed file is
+    * deleted. Returns the adds; nothing pins until the caller commits. */
+  private def publishStaged(spark: SparkSession, table: String, snap: Snapshot,
+                            layout: Layout, staged: Seq[(String, String)],
+                            schema: StructType, statsCol: String = null,
+                            statsCol2: String = null): Seq[Action] = {
+    val root = new Path(table)
+    val fs = fsOf(spark, root)
+    val renamed = scala.collection.mutable.ArrayBuffer.empty[String]
+    try {
+      checkWriterProtocol(table, snap)
+      require(layout == Plain || staged.forall(_._2 != null),
+        s"staged file(s) of $table carry no key for its layout $layout")
+      if (snap.constraints.nonEmpty && staged.nonEmpty) {
+        def scan(files: Seq[(String, String)]): DataFrame =
+          spark.read.schema(layout.fileSchema(schema))
+            .parquet(files.map(f => new Path(root, f._1).toString): _*)
+        val rows = layout match {
+          case Partitioned(pc) => staged.groupBy(_._2).toSeq
+            .map { case (v, files) => scan(files).withColumn(pc, lit(v)) }
+            .reduce(_ unionByName _)
+          case _ => scan(staged)
+        }
+        firstViolated(rows, snap.constraints).foreach { case (name, e) =>
+          throw new ConstraintViolationException(
+            s"CHECK constraint '$name' ($e) violated by the write to $table " +
+              s"— staged files deleted, nothing committed")
+        }
+      }
+      val batch = newBatchId()
+      fs.mkdirs(new Path(root, "data"))
+      staged.zipWithIndex.foreach { case ((s, _), i) =>
+        val rel = s"data/$batch-$i.parquet"
+        require(fs.rename(new Path(root, s), new Path(root, rel)),
+          s"failed to publish staged $s as $rel")
+        renamed += rel
+      }
+      footerActions(spark, root, renamed.toSeq, statsCol, statsCol2)
+        .lazyZip(staged).map((a, s) => layout.stamp(a, s._2))
+    } catch {
+      case t: Throwable =>
+        dropFiles(spark, table, staged.map(_._1) ++ renamed)
+        throw t
     }
   }
 
+  /** Stage `df` in `layout` and publish it ([[publishStaged]]): ONE
+    * write under a `.stage-*` dot-dir, hive-split by partition value or
+    * hash-routed by `pmod(hash(key), n)` — bit-identical to
+    * [[bucketId]] — to one file per non-empty bucket. NULL or empty
+    * partition values are refused up front (hive maps both to its
+    * `__HIVE_DEFAULT_PARTITION__` sentinel, which reads would reinject);
+    * a NULL bucket key fails INSIDE the write expression (one pass,
+    * race-free even for non-deterministic inputs). Returns the adds. */
+  private def stageAs(spark: SparkSession, df: DataFrame, table: String,
+                      snap: Snapshot, layout: Layout,
+                      statsCol: String = null, statsCol2: String = null): Seq[Action] = {
+    val dirCol = layout match {
+      case Plain => None
+      case Partitioned(pc) =>
+        require(df.schema(pc).dataType == StringType,
+          s"partition column '$pc' must be STRING (hive path values are strings)")
+        require(df.filter(col(pc).isNull || col(pc) === "").isEmpty,
+          s"partition column '$pc' must not contain NULLs or empty " +
+            s"strings (hive maps both to the __HIVE_DEFAULT_PARTITION__ sentinel)")
+        Some(pc)
+      case Bucketed(key, n) =>
+        require(n > 0, s"nBuckets must be positive, got $n")
+        require(df.schema(key).dataType == LongType,
+          s"bucket key '$key' must be BIGINT (is " +
+            s"${df.schema(key).dataType.simpleString}): the write-side hash " +
+            s"and the join-time bucket function must agree bit-for-bit")
+        Some("__bucket")
+    }
+    val rows = layout match {
+      case Bucketed(key, n) =>
+        // every bucket's rows land in one task: one file per bucket
+        df.withColumn("__bucket",
+            when(col(key).isNull,
+              raise_error(lit(s"bucket key '$key' must not contain NULLs " +
+                s"(a null row has no bucket)")).cast("int"))
+              .otherwise(pmod(hash(col(key)), lit(n))))
+          .repartition(col("__bucket"))
+      case _ => df
+    }
+    val root = new Path(table)
+    val fs = fsOf(spark, root)
+    val tmp = s".stage-${newBatchId()}"
+    def parts(dir: String): Seq[String] =
+      fs.listStatus(new Path(root, dir))
+        .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
+        .map(s => s"$dir/${s.getPath.getName}").sorted.toSeq
+    // undo Spark's hive-path escaping (%XX per escaped char; plain
+    // URLDecoder would also eat '+', which hive paths do NOT escape)
+    def unescape(s: String): String =
+      "%([0-9A-Fa-f]{2})".r.replaceAllIn(s, m =>
+        java.util.regex.Matcher.quoteReplacement(
+          Integer.parseInt(m.group(1), 16).toChar.toString))
+    try {
+      dirCol.fold(rows.write)(rows.write.partitionBy(_))
+        .parquet(new Path(root, tmp).toString)
+      val staged = dirCol match {
+        case None => parts(tmp).map(_ -> (null: String))
+        case Some(c) =>
+          val KeyDir = (java.util.regex.Pattern.quote(c) + "=(.*)").r
+          fs.listStatus(new Path(root, tmp)).filter(_.isDirectory)
+            .map(_.getPath.getName).sorted.toSeq.flatMap {
+              case d @ KeyDir(v) => parts(s"$tmp/$d").map(_ -> unescape(v))
+              case other => throw new IllegalStateException(
+                s"unexpected staging entry '$other' (wanted $c=<value>)")
+            }
+      }
+      publishStaged(spark, table, snap, layout, staged, df.schema, statsCol, statsCol2)
+    } finally fs.delete(new Path(root, tmp), true)
+  }
+
+  /** Stage `df` as PLAIN data files and return their add actions
+    * (relative path + footer row count; per-file min/max of `statsCol`
+    * when given — the log-level data-skipping record). Staged files are
+    * INVISIBLE until some commit pins them. */
   private[graft] def stage(spark: SparkSession, df: DataFrame,
                            table: String,
                            statsCol: String = null,
-                           statsCol2: String = null): Seq[Action] = {
-    enforceConstraints(spark, df, table)
-    val root = new Path(table)
-    val fs = fsOf(spark, root)
-    val batch = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val tmp = new Path(root, s".stage-$batch")
-    df.write.parquet(tmp.toString)
-    fs.mkdirs(new Path(root, "data"))
-    val parts = fs.listStatus(tmp)
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-      .sortBy(_.getPath.getName)
-    val rels = parts.zipWithIndex.map { case (s, i) =>
-      val rel = s"data/$batch-$i.parquet"
-      require(fs.rename(s.getPath, new Path(root, rel)),
-        s"failed to stage ${s.getPath} as $rel")
-      rel
-    }.toSeq
-    fs.delete(tmp, true)
-    footerActions(spark, root, rels, statsCol, statsCol2)
-  }
+                           statsCol2: String = null): Seq[Action] =
+    stageAs(spark, df, table, headSnapshot(spark, table), Plain, statsCol, statsCol2)
+
+  /** Stage `df` the way the table is laid out ([[layoutOf]]). */
+  private def stageLike(spark: SparkSession, df: DataFrame, table: String,
+                        snap: Snapshot): Seq[Action] =
+    stageAs(spark, df, table, snap, layoutOf(spark, table, snap))
 
   /** Wire form of a deletion vector's REFERENCED data-file basenames
     * (`"dr"`, base64 of the newline-joined sorted list): the log-only
@@ -732,97 +899,28 @@ object LakeTxn {
       new String(java.util.Base64.getDecoder.decode(r), UTF_8)
         .split("\n").toSeq.filter(_.nonEmpty))
 
-  /** Publish files a V2 writer staged, as ONE atomic commit: CHECK
-    * constraints are enforced against the staged content first (a
-    * violating write deletes its staged files and aborts — nothing
-    * pins), then the files rename into `data/` with footer row counts
-    * recorded. The V2 connector's write-side commit.
+  /** Publish files a V2 writer staged ([[publishStaged]]) as ONE atomic
+    * commit — the V2 connector's write-side commit.
     *
-    * `marker` makes the commit an EXACTLY-ONCE streaming epoch: the
-    * commit carries the `(app, batchId)` txn line, a replayed epoch
-    * finds its marker already committed and skips (staged files
-    * deleted, -1 returned), and two replays racing the same id resolve
-    * through the put-if-absent claim — exactly
-    * [[appendBatchCommit]]'s contract, driven by the native V2
-    * streaming sink instead of foreachBatch. */
+    * `marker` makes the commit an EXACTLY-ONCE streaming epoch: a
+    * replayed epoch finds its marker already committed and skips (staged
+    * files deleted, -1 returned), and two replays racing the same id
+    * resolve in [[commitMarked]] — exactly [[appendBatchCommit]]'s
+    * contract, driven by the native V2 streaming sink instead of
+    * foreachBatch. */
   private[graft] def commitStagedV2(spark: SparkSession, table: String,
-                                    staged: Seq[String],
-                                    marker: Option[(String, Long)] = None,
-                                    pvCol: String = null,
-                                    pvByFile: Map[String, String] = Map.empty): Long = {
+                                    staged: Seq[(String, String)], schema: StructType,
+                                    layout: Layout = Plain,
+                                    marker: Option[(String, Long)] = None): Long = {
     require(staged.nonEmpty, "empty V2 write: no staged files")
-    val root = new Path(table)
-    val fs = fsOf(spark, root)
-    def dropStaged(): Unit =
-      staged.foreach(s => fs.delete(new Path(root, s), false))
-    if (marker.exists(m => committedBatchIds(spark, table).contains(m))) {
-      dropStaged() // replayed epoch: already landed, nothing to do
+    if (marker.exists(committedBatchIds(spark, table).contains)) {
+      dropFiles(spark, table, staged.map(_._1)) // replayed epoch: already landed
       return -1L
     }
-    checkWriterProtocol(spark, table)
-    if (listVersions(spark, table).nonEmpty) {
-      val cs = snapshot(spark, table).constraints
-      if (cs.nonEmpty) {
-        val df = spark.read.parquet(staged.map(s => new Path(root, s).toString): _*)
-        cs.foreach { case (name, e) =>
-          val bad = df.filter(not(coalesce(expr(e).cast("boolean"), lit(true))))
-          if (!bad.isEmpty) {
-            dropStaged()
-            throw new ConstraintViolationException(
-              s"CHECK constraint '$name' ($e) violated by the V2 write to " +
-                s"$table — staged files deleted, nothing committed")
-          }
-        }
-      }
-    }
-    val batch = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    fs.mkdirs(new Path(root, "data"))
-    val rels = staged.zipWithIndex.map { case (s, i) =>
-      val rel = s"data/$batch-$i.parquet"
-      require(fs.rename(new Path(root, s), new Path(root, rel)),
-        s"failed to publish staged $s as $rel")
-      rel
-    }
-    // partitioned-table writes stamp each add action with the file's
-    // partition value (the column is physically absent from the file) —
-    // positional: rels(i) came from staged(i)
-    val adds = footerActions(spark, root, rels).zip(staged).map {
-      case (act, orig) =>
-        if (pvCol == null) act
-        else act.copy(pvCol = pvCol,
-          pvValue = pvByFile.getOrElse(orig,
-            throw new IllegalStateException(
-              s"staged file $orig of partitioned $table carries no " +
-                s"partition value")))
-    }
-    marker match {
-      case None => commit(spark, table, adds, Nil)
-      case Some((app, id)) =>
-        // the marker re-check runs on EVERY claim attempt: a racing
-        // replay that won leaves its marker, this one skips (its
-        // published-but-unpinned files are invisible, vacuumed later)
-        var attempt = 0
-        while (attempt < 100) {
-          if (committedBatchIds(spark, table).contains((app, id))) return -1L
-          val latest = listVersions(spark, table).lastOption.getOrElse(-1L)
-          if (tryPublish(spark, table, latest + 1, adds, Nil,
-            Seq(s"""{"a":"txn","app":"$app","id":$id}""")))
-            return latest + 1
-          attempt += 1
-        }
-        throw new CommitConflictException(
-          s"gave up claiming a version in $table for ($app, $id)")
-    }
+    val adds = publishStaged(spark, table, headSnapshot(spark, table), layout, staged, schema)
+    marker.fold(commit(spark, table, adds, Nil))(commitMarked(spark, table, adds, _))
   }
 
-  /** REPLACE-DATA commit for SQL row-level operations (UPDATE/MERGE/
-    * rewrite-DELETE): the staged rewritten rows publish as ONE atomic
-    * commit removing exactly `removes` — the files the rewrite scan
-    * planned at `readVersion`. Conflict contract is [[commitAt]]'s
-    * WriteSerializable: an interleaved rewrite of any replaced file
-    * aborts (never a silent lost update), interleaved appends commute.
-    * CHECK constraints validate the staged content first; a
-    * delete-everything rewrite may stage nothing (pure remove). */
   /** Deletion-vector bookkeeping for a commit removing `removedBase`:
     * a vector referencing ONLY removed files unpins (the rewrite
     * materialized its tombstones — keeping it would demote aggregate
@@ -859,62 +957,31 @@ object LakeTxn {
   private[graft] def baseName(rel: String): String =
     rel.substring(rel.lastIndexOf('/') + 1)
 
-  /** `pvCol`/`pvByFile`: on PARTITIONED tables the rewrite's staged
-    * files come per partition value with the column physically absent —
-    * each published add stamps its value, keeping the hive invariant
-    * through UPDATE/MERGE. */
+  /** REPLACE-DATA commit for SQL row-level operations (UPDATE/MERGE/
+    * rewrite-DELETE): the staged rewritten rows publish as ONE atomic
+    * commit removing exactly `removes` — the files the rewrite scan
+    * planned at `readVersion`. Conflict contract is [[commitAt]]'s
+    * WriteSerializable: an interleaved rewrite of any replaced file
+    * aborts (never a silent lost update), interleaved appends commute.
+    * A delete-everything rewrite may stage nothing (pure remove). */
   private[graft] def replaceFilesCommit(spark: SparkSession, table: String,
-                                        staged: Seq[String], readVersion: Long,
-                                        removes: Seq[String],
-                                        pvCol: String = null,
-                                        pvByFile: Map[String, String] = Map.empty): Long = {
+                                        staged: Seq[(String, String)], schema: StructType,
+                                        readVersion: Long, removes: Seq[String],
+                                        layout: Layout = Plain): Long = {
     require(staged.nonEmpty || removes.nonEmpty, "empty replace-data commit")
-    val root = new Path(table)
-    val fs = fsOf(spark, root)
-    var shrunk: Seq[Action] = Nil // tracked for cleanup on ANY failure
-    def dropStaged(): Unit = {
-      staged.foreach(s => fs.delete(new Path(root, s), false))
-      dropAdds(spark, table, shrunk)
-    }
+    var adds: Seq[Action] = Nil // published files, dropped on ANY failure
     try {
-      checkWriterProtocol(spark, table)
       val snap = snapshot(spark, table)
-      if (staged.nonEmpty && snap.constraints.nonEmpty) {
-        val df = spark.read.parquet(staged.map(s => new Path(root, s).toString): _*)
-        snap.constraints.foreach { case (name, e) =>
-          val bad = df.filter(not(coalesce(expr(e).cast("boolean"), lit(true))))
-          if (!bad.isEmpty) throw new ConstraintViolationException(
-            s"CHECK constraint '$name' ($e) violated by the rewrite of " +
-              s"$table — staged files deleted, nothing committed")
-        }
-      }
+      adds = publishStaged(spark, table, snap, layout, staged, schema)
       // a rewrite MATERIALIZES the deletion vectors its scan applied:
       // fully-covered vectors unpin, partially-covered ones shrink —
       // after this commit no live vector references a removed file
       val (dvAdds, dvRemoves) = rewriteDvs(spark, table, snap.dvs,
         removes.map(baseName).toSet)
-      shrunk = dvAdds
-      val batch = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      fs.mkdirs(new Path(root, "data"))
-      val rels = staged.zipWithIndex.map { case (s, i) =>
-        val rel = s"data/$batch-$i.parquet"
-        require(fs.rename(new Path(root, s), new Path(root, rel)),
-          s"failed to publish staged $s as $rel")
-        rel
-      }
-      val adds = footerActions(spark, root, rels).zip(staged).map {
-        case (act, orig) =>
-          if (pvCol == null) act
-          else act.copy(pvCol = pvCol,
-            pvValue = pvByFile.getOrElse(orig,
-              throw new IllegalStateException(
-                s"staged rewrite file $orig of partitioned $table carries " +
-                  s"no partition value")))
-      }
-      commitAt(spark, table, readVersion, adds ++ dvAdds,
-        removes ++ dvRemoves)
+      adds ++= dvAdds
+      commitAt(spark, table, readVersion, adds, removes ++ dvRemoves)
     } catch {
-      case t: Throwable => dropStaged(); throw t
+      case t: Throwable => dropFiles(spark, table, adds.map(_.file)); throw t
     }
   }
 
@@ -925,116 +992,63 @@ object LakeTxn {
     *    schema and constraints survive (they are not data).
     *  - `scope = Some((col, values))`: partition-scoped replaceWhere —
     *    only files whose LOG-recorded partition value of `col` is in
-    *    `values` unpin. Every live file must carry a partition value
-    *    for `col` (file-level replacement is only exact on a
-    *    partitioned table), and the staged rows must all fall inside
-    *    the scope (Delta's replaceWhere validation). Single-value
-    *    scopes stamp the replacement files with that partition value,
-    *    preserving the partitioned-table invariant.
+    *    `values` unpin. The table must be partitioned by `col` with
+    *    every live file carrying a value (file-level replacement is only
+    *    exact then), and every staged file's partition value must fall
+    *    inside the scope (Delta's replaceWhere validation) — the hive
+    *    `INSERT OVERWRITE ... PARTITION (pc='v')` shape on the log.
     *
     * Conflict contract is STRICT for overwrites: any commit interleaved
     * after `readVersion` (even a pure append — its rows would be
     * silently erased by the blind remove-all) aborts with
-    * [[CommitConflictException]]; staged files are deleted on abort. */
-  /** `pvByFile` (staged rel → partition value) arrives from the
-    * partition-splitting writer on PARTITIONED tables: the staged files
-    * physically lack the scope column, so scope validation checks the
-    * writer-recorded values and each published add action stamps its
-    * own value — the hive `INSERT OVERWRITE ... PARTITION (pc='v')`
-    * shape on the commit log. */
+    * [[CommitConflictException]]; staged and published files are
+    * deleted on abort. */
   private[graft] def overwriteStagedV2(spark: SparkSession, table: String,
-                                       staged: Seq[String], readVersion: Long,
+                                       staged: Seq[(String, String)], schema: StructType,
+                                       readVersion: Long,
                                        scope: Option[(String, Seq[String])],
-                                       pvByFile: Map[String, String] = Map.empty): Long = {
+                                       layout: Layout = Plain): Long = {
     require(staged.nonEmpty, "empty V2 overwrite: no staged files")
-    val root = new Path(table)
-    val fs = fsOf(spark, root)
-    var shrunkTracked: Seq[Action] = Nil // cleanup on ANY failure
-    def dropStaged(): Unit = {
-      staged.foreach(s => fs.delete(new Path(root, s), false))
-      dropAdds(spark, table, shrunkTracked)
+    if (listVersions(spark, table).isEmpty) {
+      // overwriting a table that does not exist yet IS the bootstrap
+      require(scope.isEmpty, "scoped overwrite of a nonexistent table")
+      return commitStagedV2(spark, table, staged, schema, layout)
     }
+    var adds: Seq[Action] = Nil // shrunk vectors and published files
     try {
-      if (listVersions(spark, table).isEmpty) {
-        // overwriting a table that does not exist yet IS the bootstrap
-        require(scope.isEmpty, "scoped overwrite of a nonexistent table")
-        return commitStagedV2(spark, table, staged)
-      }
-      checkWriterProtocol(spark, table)
       val snap = snapshot(spark, table, Some(readVersion).filter(_ >= 0))
-      val stagedDf =
-        spark.read.parquet(staged.map(s => new Path(root, s).toString): _*)
-      snap.constraints.foreach { case (name, e) =>
-        val bad = stagedDf.filter(not(coalesce(expr(e).cast("boolean"), lit(true))))
-        if (!bad.isEmpty) throw new ConstraintViolationException(
-          s"CHECK constraint '$name' ($e) violated by the overwrite of " +
-            s"$table — staged files deleted, nothing committed")
-      }
-      val (removes, shrunkDvs, stampPv) = scope match {
-        case None =>
-          (snap.files ++ snap.dvs.map(_.file), Seq.empty[Action], None)
+      val removes = scope match {
+        case None => snap.files ++ snap.dvs.map(_.file)
         case Some((pc, values)) =>
           val unpartitioned = snap.adds.filter(_.pvCol != pc)
-          require(unpartitioned.isEmpty,
+          require(layout == Partitioned(pc) && unpartitioned.isEmpty,
             s"scoped overwrite of $table needs every live file partitioned " +
               s"by '$pc'; ${unpartitioned.size} file(s) are not — file-level " +
               s"replacement would be inexact")
-          if (pvByFile.nonEmpty) {
-            // partition-split staged files: the writer recorded each
-            // file's value; rows outside the scope cannot exist in a
-            // file whose value is in it
-            val missing = staged.filterNot(pvByFile.contains)
-            require(missing.isEmpty,
-              s"staged file(s) ${missing.mkString(", ")} carry no partition value")
-            val outside = staged.filterNot(s => values.contains(pvByFile(s)))
-            if (outside.nonEmpty) throw new ConstraintViolationException(
-              s"overwrite scope $pc IN (${values.mkString(", ")}) of $table: " +
-                s"replacement rows land in partition(s) " +
-                s"${outside.map(pvByFile).distinct.mkString(", ")} outside the " +
-                s"scope — nothing committed")
-          } else {
-            val outside = stagedDf.filter(col(pc).isNull || !col(pc).isin(values: _*))
-            if (!outside.isEmpty) throw new ConstraintViolationException(
-              s"overwrite scope $pc IN (${values.mkString(", ")}) of $table: " +
-                s"the replacement rows reach outside the scope — nothing committed")
-          }
+          val outside = staged.map(_._2).filterNot(values.contains).distinct
+          if (outside.nonEmpty) throw new ConstraintViolationException(
+            s"overwrite scope $pc IN (${values.mkString(", ")}) of $table: " +
+              s"replacement rows land in partition(s) ${outside.mkString(", ")} " +
+              s"outside the scope — nothing committed")
           val doomed = snap.adds.filter(a => values.contains(a.pvValue)).map(_.file)
           // fully-covered vectors unpin, partially-covered ones shrink
           val (dvAdds, dvRemoves) = rewriteDvs(spark, table, snap.dvs,
             doomed.map(baseName).toSet)
-          (doomed ++ dvRemoves, dvAdds,
-            if (values.size == 1) Some((pc, values.head)) else None)
+          adds = dvAdds
+          doomed ++ dvRemoves
       }
-      shrunkTracked = shrunkDvs
-      val batch = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      fs.mkdirs(new Path(root, "data"))
-      val rels = staged.zipWithIndex.map { case (s, i) =>
-        val rel = s"data/$batch-$i.parquet"
-        require(fs.rename(new Path(root, s), new Path(root, rel)),
-          s"failed to publish staged $s as $rel")
-        rel
-      }
-      val adds = footerActions(spark, root, rels).zip(staged).map {
-        case (act, orig) =>
-          if (pvByFile.nonEmpty)
-            act.copy(pvCol = scope.get._1, pvValue = pvByFile(orig))
-          else stampPv.fold(act) { case (pc, v) =>
-            act.copy(pvCol = pc, pvValue = v) }
-      }
+      adds = publishStaged(spark, table, snap, layout, staged, schema) ++ adds
       val latest = listVersions(spark, table).lastOption.getOrElse(-1L)
       if (latest != readVersion || !tryPublish(spark, table, readVersion + 1,
-        adds ++ shrunkDvs, removes)) {
-        // the replacement files are published-but-unpinned: delete them
-        // here (they are known and invisible) rather than leak to vacuum
-        (adds ++ shrunkDvs).foreach(a => fs.delete(new Path(root, a.file), false))
+        adds, removes))
         throw new CommitConflictException(
           s"overwrite conflict in $table: the table advanced past read " +
             s"version $readVersion while the overwrite ran — a blind " +
             s"remove-all would erase the interleaved commit's rows; recompute")
-      }
       readVersion + 1
     } catch {
-      case t: Throwable => dropStaged(); throw t
+      case t: Throwable =>
+        dropFiles(spark, table, staged.map(_._1) ++ adds.map(_.file)); throw t
     }
   }
 
@@ -1155,7 +1169,7 @@ object LakeTxn {
                readDeps: Seq[String] = Nil,
                dvBudget: Long = MaxDvPositions): Long = {
     require(adds.nonEmpty || removes.nonEmpty || extraLines.nonEmpty, "empty commit")
-    checkWriterProtocol(spark, table)
+    checkWriterProtocol(table, headSnapshot(spark, table))
     val removeSet = removes.toSet
     val readDepSet = readDeps.toSet
     val ourDvs = adds.filter(a => a.add && a.dv)
@@ -1271,13 +1285,12 @@ object LakeTxn {
     * engine's ([[SupportedWriterVersion]]) — the half of the gate that
     * protects FUTURE readers from commits authored without knowledge of
     * the table's required features. */
-  private def checkWriterProtocol(spark: SparkSession, table: String): Unit =
-    if (listVersions(spark, table).nonEmpty) {
-      val w = snapshot(spark, table).protocol._2
-      require(w <= SupportedWriterVersion,
-        s"$table requires writer protocol version $w; this engine " +
-          s"implements $SupportedWriterVersion — refusing to commit")
-    }
+  private def checkWriterProtocol(table: String, snap: Snapshot): Unit = {
+    val w = snap.protocol._2
+    require(w <= SupportedWriterVersion,
+      s"$table requires writer protocol version $w; this engine " +
+        s"implements $SupportedWriterVersion — refusing to commit")
+  }
 
   /** Register a CHECK constraint: the EXISTING table must already
     * satisfy it (a constraint that is born violated is a lie), then the
@@ -1288,13 +1301,11 @@ object LakeTxn {
       val vs = listVersions(spark, table)
       // an EMPTY table (schema-only, catalog-created) satisfies any
       // constraint trivially — only data-bearing snapshots validate
-      if (vs.nonEmpty && snapshot(spark, table).files.nonEmpty) {
-        val bad = read(spark, table)
-          .filter(not(coalesce(expr(sqlExpr).cast("boolean"), lit(true))))
-        if (!bad.isEmpty) throw new ConstraintViolationException(
+      if (vs.nonEmpty && snapshot(spark, table).files.nonEmpty &&
+        firstViolated(read(spark, table), Map(name -> sqlExpr)).nonEmpty)
+        throw new ConstraintViolationException(
           s"cannot add CHECK constraint '$name' ($sqlExpr) to $table: " +
             s"existing rows violate it")
-      }
       commitAt(spark, table, vs.lastOption.getOrElse(-1L), Nil, Nil,
         Seq(constraintLine(name, sqlExpr)))
     }
@@ -1637,7 +1648,7 @@ object LakeTxn {
     val z = zCluster(scanWithDvs(spark, table, snap, snap.files),
       xCol, yCol, files, bits)
     commitAt(spark, table, snap.version,
-      stage(spark, z, table, statsCol = xCol, statsCol2 = yCol),
+      stageAs(spark, z, table, snap, Plain, statsCol = xCol, statsCol2 = yCol),
       snap.files ++ snap.dvs.map(_.file))
   }
 
@@ -1826,76 +1837,15 @@ object LakeTxn {
     * enforced loudly: a narrower type or a NULL would hash differently
     * than the join-time bucket function and silently mis-collocate. */
   def appendCommitBucketed(spark: SparkSession, df: DataFrame, table: String,
-                           keyCol: String, nBuckets: Int): Long = {
-    val staged = stageBucketedData(spark, df, table, keyCol, nBuckets)
-    require(staged.nonEmpty, "empty bucketed append")
+                           keyCol: String, nBuckets: Int): Long =
+    appendAs(spark, df, table, Bucketed(keyCol, nBuckets))
+
+  private def appendAs(spark: SparkSession, df: DataFrame, table: String,
+                       layout: Layout): Long = {
+    val staged = stageAs(spark, df, table, headSnapshot(spark, table), layout)
+    require(staged.nonEmpty, s"empty $layout append")
     commit(spark, table, staged, Nil)
   }
-
-  /** Stage `df` bucket-split with stamped add actions — the staging
-    * half of [[appendCommitBucketed]], shared with the MoR writers so
-    * UPDATE/CDC on a bucketed table keeps the layout (and its
-    * zero-Exchange joins) instead of silently demoting it. NULL keys
-    * fail INSIDE the write expression (one pass, race-free even for
-    * non-deterministic inputs — a driver pre-scan could pass while the
-    * write's own evaluation still produces a NULL). */
-  private def stageBucketedData(spark: SparkSession, df: DataFrame,
-                                table: String, keyCol: String,
-                                nBuckets: Int): Seq[Action] = {
-    require(nBuckets > 0, s"nBuckets must be positive, got $nBuckets")
-    require(df.schema(keyCol).dataType == org.apache.spark.sql.types.LongType,
-      s"bucket key '$keyCol' must be BIGINT (is " +
-        s"${df.schema(keyCol).dataType.simpleString}): the write-side hash " +
-        s"and the join-time bucket function must agree bit-for-bit")
-    enforceConstraints(spark, df, table) // custom staging path: enforce here
-    val root = new Path(table)
-    val fs = fsOf(spark, root)
-    val batch = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val tmp = new Path(root, s".stage-$batch")
-    // repartition BY the bucket value: every bucket's rows land in one
-    // task, so the hive staging writes exactly one file per non-empty
-    // bucket; the synthetic __bucket column physically leaves the files
-    df.withColumn("__bucket",
-        when(col(keyCol).isNull,
-          raise_error(lit(s"bucket key '$keyCol' must not contain NULLs " +
-            s"(a null row has no bucket)")).cast("int"))
-          .otherwise(pmod(hash(col(keyCol)), lit(nBuckets))))
-      .repartition(col("__bucket"))
-      .write.partitionBy("__bucket").parquet(tmp.toString)
-    fs.mkdirs(new Path(root, "data"))
-    val BucketDir = """__bucket=(\d+)""".r
-    var i = 0
-    val adds = Seq.newBuilder[Action]
-    fs.listStatus(tmp).filter(_.isDirectory).sortBy(_.getPath.getName).foreach { d =>
-      val id = d.getPath.getName match {
-        case BucketDir(v) => v.toInt
-        case other => throw new IllegalStateException(
-          s"unexpected staging entry '$other' (wanted __bucket=<id>)")
-      }
-      fs.listStatus(d.getPath)
-        .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-        .sortBy(_.getPath.getName).foreach { s =>
-          val rel = s"data/$batch-$i.parquet"
-          require(fs.rename(s.getPath, new Path(root, rel)),
-            s"failed to stage ${s.getPath} as $rel")
-          adds += footerAction(spark, root, rel, null)
-            .copy(bkCol = keyCol, bkN = nBuckets.toLong, bkId = id.toLong)
-          i += 1
-        }
-    }
-    fs.delete(tmp, true)
-    adds.result()
-  }
-
-  /** The single (key, n) bucket layout governing EVERY live data file,
-    * when the table is uniformly bucketed; None for unbucketed or
-    * mixed tables. */
-  private def uniformBucket(snap: Snapshot): Option[(String, Int)] =
-    snap.adds.map(a => (Option(a.bkCol), a.bkN)).distinct match {
-      case Seq((Some(c), n)) if snap.adds.forall(_.bkId >= 0) =>
-        Some((c, n.toInt))
-      case _ => None
-    }
 
   // ------------------------------------------------------------------
   // partition values recorded in the log (hive-style, listing-free)
@@ -1911,92 +1861,8 @@ object LakeTxn {
     * String partition columns only (the hive-path value is a string;
     * re-typing it would invite silent coercion bugs). */
   def appendCommitPartitioned(spark: SparkSession, df: DataFrame, table: String,
-                              partCol: String): Long = {
-    val staged = stagePartitionedData(spark, df, table, partCol)
-    require(staged.nonEmpty, "empty partitioned append")
-    commit(spark, table, staged, Nil)
-  }
-
-  /** Stage `df` hive-split per partition value (the column physically
-    * leaves the files; each add action stamps its value) — the staging
-    * half of [[appendCommitPartitioned]], shared with the MoR writers
-    * so UPDATE/CDC on a partitioned table keeps the invariant. */
-  private def stagePartitionedData(spark: SparkSession, df: DataFrame,
-                                   table: String, partCol: String): Seq[Action] = {
-    require(df.schema(partCol).dataType == org.apache.spark.sql.types.StringType,
-      s"partition column '$partCol' must be STRING (hive path values are strings)")
-    // NULL and '' both land in the __HIVE_DEFAULT_PARTITION__ directory:
-    // the log would record that sentinel as the value and reads would
-    // reinject it — silent corruption, so both are refused up front
-    require(df.filter(col(partCol).isNull || col(partCol) === "").isEmpty,
-      s"partition column '$partCol' must not contain NULLs or empty " +
-        s"strings (hive maps both to the __HIVE_DEFAULT_PARTITION__ sentinel)")
-    enforceConstraints(spark, df, table) // custom staging path: enforce here
-    val root = new Path(table)
-    val fs = fsOf(spark, root)
-    val batch = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val tmp = new Path(root, s".stage-$batch")
-    df.write.partitionBy(partCol).parquet(tmp.toString)
-    fs.mkdirs(new Path(root, "data"))
-    val PartDir = (java.util.regex.Pattern.quote(partCol) + "=(.*)").r
-    var i = 0
-    val adds = Seq.newBuilder[Action]
-    fs.listStatus(tmp).filter(_.isDirectory).sortBy(_.getPath.getName).foreach { d =>
-      // undo Spark's hive-path escaping (%XX per escaped char; plain
-      // URLDecoder would also eat '+', which hive paths do NOT escape)
-      def unescape(s: String): String =
-        "%([0-9A-Fa-f]{2})".r.replaceAllIn(s, m =>
-          java.util.regex.Matcher.quoteReplacement(
-            Integer.parseInt(m.group(1), 16).toChar.toString))
-      val value = d.getPath.getName match {
-        case PartDir(v) => unescape(v)
-        case other => throw new IllegalStateException(
-          s"unexpected staging entry '$other' (wanted $partCol=<value>)")
-      }
-      fs.listStatus(d.getPath)
-        .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-        .sortBy(_.getPath.getName).foreach { s =>
-          val rel = s"data/$batch-$i.parquet"
-          require(fs.rename(s.getPath, new Path(root, rel)),
-            s"failed to stage ${s.getPath} as $rel")
-          adds += footerAction(spark, root, rel, null)
-            .copy(pvCol = partCol, pvValue = value)
-          i += 1
-        }
-    }
-    fs.delete(tmp, true)
-    adds.result()
-  }
-
-  /** The single partition column governing EVERY live data file, when
-    * the table is uniformly hive-partitioned (the invariant
-    * `INSERT OVERWRITE ... PARTITION` relies on); None for
-    * unpartitioned or mixed tables. */
-  private def uniformPvCol(snap: Snapshot): Option[String] =
-    snap.adds.map(a => Option(a.pvCol)).distinct match {
-      case Seq(Some(pc)) => Some(pc)
-      case _ => None
-    }
-
-  /** Stage data rows the way the TABLE is laid out: hive-split with
-    * stamped partition values on a uniformly partitioned table,
-    * bucket-split with stamped ids on a uniformly bucketed one, plain
-    * staging otherwise — what keeps the MoR writers' appended files
-    * from silently breaking either layout invariant (a partitioned
-    * table would lose log pruning and refuse later scoped overwrites;
-    * a bucketed table would silently demote every later join back to
-    * a full shuffle). */
-  private def stageDataLike(spark: SparkSession, df: DataFrame, table: String,
-                            snap: Snapshot): Seq[Action] =
-    uniformPvCol(snap) match {
-      case Some(pc) if df.columns.contains(pc) =>
-        stagePartitionedData(spark, df, table, pc)
-      case _ => uniformBucket(snap) match {
-        case Some((key, n)) if df.columns.contains(key) =>
-          stageBucketedData(spark, df, table, key, n)
-        case _ => stage(spark, df, table)
-      }
-    }
+                              partCol: String): Long =
+    appendAs(spark, df, table, Partitioned(partCol))
 
   /** Partition-pruned read: keep only files whose log-recorded partition
     * value is in `values` (files without a recorded value for `partCol`
@@ -2159,7 +2025,7 @@ object LakeTxn {
           // silently lost delete
           try commitAt(spark, table, snap.version, dvAdds, Nil,
             readDeps = snap.files, dvBudget = maxDvPositions)
-          catch { case t: Throwable => dropAdds(spark, table, dvAdds); throw t }
+          catch { case t: Throwable => dropFiles(spark, table, dvAdds.map(_.file)); throw t }
         }
       }
     }
@@ -2167,11 +2033,11 @@ object LakeTxn {
   /** Delete published-but-unpinned files after a failed commit attempt
     * (a conflict retry restages from scratch; nothing should leak to
     * vacuum when the paths are known). Idempotent. */
-  private def dropAdds(spark: SparkSession, table: String,
-                       adds: Seq[Action]): Unit = {
+  private def dropFiles(spark: SparkSession, table: String,
+                        files: Seq[String]): Unit = {
     val root = new Path(table)
     val fs = fsOf(spark, root)
-    adds.foreach(a => fs.delete(new Path(root, a.file), false))
+    files.foreach(f => fs.delete(new Path(root, f), false))
   }
 
   /** MERGE-ON-READ UPDATE: rows matching `cond` are tombstoned by a
@@ -2186,11 +2052,10 @@ object LakeTxn {
     * Conflict contract: an interleaved removal of any file the
     * tombstone positions reference, or a concurrent vector on a shared
     * file, RETRIES by recomputing from the fresh snapshot ([[commitAt]]
-    * readDeps + DV-vs-DV rules). On a hive-PARTITIONED table the
-    * rewritten rows stage split per partition value with their add
-    * actions stamped — the partitioned-table invariant survives MoR
-    * updates just as it does copy-on-write rewrites. Returns the
-    * committed version, or -1 if nothing matched. */
+    * readDeps + DV-vs-DV rules). The rewritten rows stage the way the
+    * table is laid out ([[layoutOf]]), so a partitioned or bucketed
+    * table keeps its layout through MoR updates. Returns the committed
+    * version, or -1 if nothing matched. */
   def updateMorWhere(spark: SparkSession, table: String,
                      cond: org.apache.spark.sql.Column,
                      sets: Seq[(String, org.apache.spark.sql.Column)],
@@ -2216,13 +2081,13 @@ object LakeTxn {
             }.drop("__dv_file", "__dv_pos")
             val dvAdds = Seq(LakeDv.write(spark, table, positions))
             try {
-              val dataAdds = stageDataLike(spark, rewritten, table, snap)
+              val dataAdds = stageLike(spark, rewritten, table, snap)
               try commitAt(spark, table, snap.version, dvAdds ++ dataAdds, Nil,
                 readDeps = snap.files, dvBudget = maxDvPositions)
               catch { case t: Throwable =>
-                dropAdds(spark, table, dataAdds); throw t }
+                dropFiles(spark, table, dataAdds.map(_.file)); throw t }
             } catch { case t: Throwable =>
-              dropAdds(spark, table, dvAdds); throw t }
+              dropFiles(spark, table, dvAdds.map(_.file)); throw t }
           }
         } finally matched.unpersist()
       }
@@ -2268,6 +2133,7 @@ object LakeTxn {
     * its id already committed and skips — the commit log doubles as
     * the sink's transaction log, which is precisely how a lakehouse
     * streaming sink gets exactly-once on top of its commit protocol.
+    * The batch stages the way the table is laid out ([[layoutOf]]).
     * Staging runs before the claim (it is the expensive part); the
     * marker re-check happens on EVERY claim attempt, so two replayed
     * epochs racing the same id resolve through put-if-absent: whoever
@@ -2279,19 +2145,29 @@ object LakeTxn {
   def appendBatchCommit(spark: SparkSession, df: DataFrame, table: String,
                         app: String, batchId: Long): Long = {
     if (committedBatchIds(spark, table).contains((app, batchId))) return -1L
-    checkWriterProtocol(spark, table)
-    val adds = stage(spark, df, table)
-    val marker = s"""{"a":"txn","app":"$app","id":$batchId}"""
+    val snap = headSnapshot(spark, table)
+    commitMarked(spark, table, stageLike(spark, df, table, snap), (app, batchId))
+  }
+
+  /** Claim the next version for the adds of an EXACTLY-ONCE batch: the
+    * commit carries the `{"a":"txn","app":…,"id":…}` marker, and the
+    * marker re-check runs on EVERY claim attempt — a racing replay that
+    * won leaves its marker, and this one returns -1 (its published but
+    * unpinned files are invisible, reclaimed by [[vacuum]]). */
+  private def commitMarked(spark: SparkSession, table: String, adds: Seq[Action],
+                           marker: (String, Long)): Long = {
+    val (app, id) = marker
     var attempt = 0
     while (attempt < 100) {
-      if (committedBatchIds(spark, table).contains((app, batchId))) return -1L
+      if (committedBatchIds(spark, table).contains(marker)) return -1L
       val latest = listVersions(spark, table).lastOption.getOrElse(-1L)
-      if (tryPublish(spark, table, latest + 1, adds, Nil, Seq(marker)))
+      if (tryPublish(spark, table, latest + 1, adds, Nil,
+        Seq(s"""{"a":"txn","app":"$app","id":$id}""")))
         return latest + 1
       attempt += 1
     }
     throw new CommitConflictException(
-      s"gave up claiming a version in $table for ($app, $batchId)")
+      s"gave up claiming a version in $table for ($app, $id)")
   }
 
   /** What one vacuum pass did. `orphansSkipped` counts unpublished
@@ -2405,7 +2281,9 @@ object LakeTxn {
     * live file, then publish remove(old)+add(new) as one atomic commit.
     * A concurrent reader sees either the old file set or the new one —
     * never both, never neither (content is identical either way). Old
-    * snapshots keep reading the old files. */
+    * snapshots keep reading the old files. The rewrite keeps the table's
+    * layout ([[layoutOf]]): a partitioned table packs per value, and a
+    * bucketed one re-routes into one file per bucket (its one shuffle). */
   def compactCommit(spark: SparkSession, table: String,
                     targetBytes: Long): Long = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
@@ -2419,11 +2297,11 @@ object LakeTxn {
     // compaction is how DV debt gets paid down
     val packed = scanWithDvs(spark, table, snap, snap.files)
       // coalesce, not repartition: each output task concatenates whole
-      // input files, so no byte of the table crosses a shuffle
+      // input files, so no byte of a plain table crosses a shuffle
       .coalesce(nOut)
     // the read version rides into the commit: an interleaved rewrite of
     // any packed file aborts this compaction instead of resurrecting it
-    commitAt(spark, table, snap.version, stage(spark, packed, table),
+    commitAt(spark, table, snap.version, stageLike(spark, packed, table, snap),
       snap.files ++ snap.dvs.map(_.file))
   }
 
@@ -2438,7 +2316,8 @@ object LakeTxn {
     * without a changed key are untouched — at 100 TB a small change
     * batch rewrites a handful of files, not the table. The change-key
     * frame is broadcast (a CDC batch is small next to the table); the
-    * affected-file list is driver-scale (file names). */
+    * affected-file list is driver-scale (file names). The replacement
+    * stages the way the table is laid out ([[layoutOf]]). */
   def applyChanges(spark: SparkSession, table: String, changes: DataFrame,
                    keyCol: String, opCol: String = "__op"): Long = {
     val snap = snapshot(spark, table)
@@ -2472,11 +2351,11 @@ object LakeTxn {
     val (dvAdds, dvRemoves) = rewriteDvs(spark, table, snap.dvs,
       affected.map(baseName).toSet)
     try {
-      val dataAdds = stage(spark, replacement, table)
+      val dataAdds = stageLike(spark, replacement, table, snap)
       try commitAt(spark, table, snap.version, dataAdds ++ dvAdds,
         affected ++ dvRemoves)
-      catch { case t: Throwable => dropAdds(spark, table, dataAdds); throw t }
-    } catch { case t: Throwable => dropAdds(spark, table, dvAdds); throw t }
+      catch { case t: Throwable => dropFiles(spark, table, dataAdds.map(_.file)); throw t }
+    } catch { case t: Throwable => dropFiles(spark, table, dvAdds.map(_.file)); throw t }
   }
 
   /** MERGE-ON-READ CDC apply — the write-cheap twin of [[applyChanges]]
@@ -2491,11 +2370,9 @@ object LakeTxn {
     * an interleaved removal of ANY read file, or a concurrent vector on
     * a shared file, RETRIES by recomputing from the fresh snapshot
     * (readDeps + DV-vs-DV rules — the retry's MoR scan excludes the
-    * winner's tombstones, so it is duplicate-free). On a hive-
-    * PARTITIONED table the upsert rows stage split per partition value
-    * with stamped add actions, keeping the partitioned-table invariant.
-    * Returns the committed version, or -1 if the batch changes
-    * nothing. */
+    * winner's tombstones, so it is duplicate-free). The upsert rows
+    * stage the way the table is laid out ([[layoutOf]]). Returns the
+    * committed version, or -1 if the batch changes nothing. */
   def applyChangesMor(spark: SparkSession, table: String, changes: DataFrame,
                       keyCol: String, opCol: String = "__op",
                       maxDvPositions: Long = MaxDvPositions): Long =
@@ -2516,16 +2393,16 @@ object LakeTxn {
         try {
           val dataAdds =
             if (upserts.isEmpty) Nil
-            else stageDataLike(spark, upserts, table, snap)
+            else stageLike(spark, upserts, table, snap)
           if (dvAdds.isEmpty && dataAdds.isEmpty) -1L
           else {
             try commitAt(spark, table, snap.version, dvAdds ++ dataAdds, Nil,
               readDeps = snap.files, dvBudget = maxDvPositions)
             catch { case t: Throwable =>
-              dropAdds(spark, table, dataAdds); throw t }
+              dropFiles(spark, table, dataAdds.map(_.file)); throw t }
           }
         } catch { case t: Throwable =>
-          dropAdds(spark, table, dvAdds); throw t }
+          dropFiles(spark, table, dvAdds.map(_.file)); throw t }
       }
     }
 

@@ -870,9 +870,10 @@ class GraftLakeCatalog extends TableCatalog with SupportsNamespaces
       def run(a: InternalRow) = {
         val t = resolveTable(str(a, 0))
         val snap = LakeTxn.snapshot(spark, t)
-        val pvc = LakeTxn.tableSchema(spark, t, snap)
-          .flatMap(LakeStreamTable.pvColOf)
-          .orElse(snap.adds.flatMap(x => Option(x.pvCol)).headOption)
+        val pvc = LakeTxn.layoutOf(spark, t, snap) match {
+          case LakeTxn.Partitioned(pc) => Some(pc)
+          case _ => None
+        }
         Array(Long.box(snap.version),
           Long.box(snap.adds.size.toLong),
           Long.box(snap.adds.map(_.rows).sum),

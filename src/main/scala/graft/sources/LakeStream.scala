@@ -322,46 +322,40 @@ final class LakeStreamTable(tablePath: String, tableSchema: StructType,
       }
 
       override def build(): Write = new Write {
-        // the partition column from THIS handle's schema metadata, or —
-        // path-API writes construct the Table from the QUERY's schema
-        // (no metadata) — from the log's governing schema, so a
-        // writeStream/df.write into a partitioned table still splits
-        private val pvc = LakeStreamTable.pvColOf(tableSchema).orElse {
+        // decided from the log, not from this handle's schema: path-API
+        // writes construct the Table from the QUERY's schema, which
+        // carries no partition metadata
+        private val layout = {
           val spark = SparkSession.active
-          if (LakeTxn.listVersions(spark, tablePath).isEmpty) None
-          else LakeTxn.tableSchema(spark, tablePath,
-            LakeTxn.snapshot(spark, tablePath))
-            .flatMap(LakeStreamTable.pvColOf)
+          LakeTxn.layoutOf(spark, tablePath, LakeTxn.headSnapshot(spark, tablePath))
         }
-        pvc.foreach(pc => require(info.schema().fieldNames.contains(pc),
-          s"a write into the PARTITIONED table $name must carry its " +
-            s"partition column '$pc'"))
+        layout.column.foreach(c => require(info.schema().fieldNames.contains(c),
+          s"a write into $name, laid out by '$c', must carry that column"))
         override def toBatch(): BatchWrite = replace match {
           case None =>
-            new LakeBatchWrite(tablePath, info.schema(), info.queryId(), pvc)
-          case Some(scope) => pvc match {
-            case None =>
-              new LakeOverwriteBatchWrite(tablePath, info.schema(),
-                info.queryId(), scope)
-            case Some(pc) =>
-              // partitioned tables overwrite PARTITIONS, exactly —
-              // `INSERT OVERWRITE ... PARTITION (pc='v')` arrives as an
-              // equality scope on pc; a blind truncate-and-append (plain
-              // INSERT OVERWRITE / mode("overwrite")) is refused: it
-              // would erase partitions the replacement never names
-              val sc = scope.getOrElse(throw new IllegalArgumentException(
-                s"overwrite of the PARTITIONED table $name must target " +
-                  s"the partition column '$pc' (INSERT OVERWRITE ... " +
-                  s"PARTITION ($pc='v'), or writeTo.overwrite($pc = 'v')); " +
-                  s"a blind truncate-and-append would erase every other " +
-                  s"partition"))
-              require(sc._1 == pc,
-                s"overwrite scope of $name must be on its partition " +
-                  s"column '$pc' (got '${sc._1}'): file-level replacement " +
-                  s"is only exact along the partitioning")
-              new LakeOverwriteBatchWrite(tablePath, info.schema(),
-                info.queryId(), Some(sc), Some(pc))
-          }
+            new LakeBatchWrite(tablePath, info.schema(), info.queryId(), layout)
+          case Some(scope) =>
+            layout match {
+              case LakeTxn.Partitioned(pc) =>
+                // partitioned tables overwrite PARTITIONS, exactly —
+                // `INSERT OVERWRITE ... PARTITION (pc='v')` arrives as an
+                // equality scope on pc; a blind truncate-and-append (plain
+                // INSERT OVERWRITE / mode("overwrite")) is refused: it
+                // would erase partitions the replacement never names
+                val sc = scope.getOrElse(throw new IllegalArgumentException(
+                  s"overwrite of the PARTITIONED table $name must target " +
+                    s"the partition column '$pc' (INSERT OVERWRITE ... " +
+                    s"PARTITION ($pc='v'), or writeTo.overwrite($pc = 'v')); " +
+                    s"a blind truncate-and-append would erase every other " +
+                    s"partition"))
+                require(sc._1 == pc,
+                  s"overwrite scope of $name must be on its partition " +
+                    s"column '$pc' (got '${sc._1}'): file-level replacement " +
+                    s"is only exact along the partitioning")
+              case _ =>
+            }
+            new LakeOverwriteBatchWrite(tablePath, info.schema(),
+              info.queryId(), scope, layout)
         }
         /** The EXACTLY-ONCE streaming sink: each epoch publishes as one
           * atomic commit carrying an `(app, epochId)` idempotence
@@ -377,7 +371,7 @@ final class LakeStreamTable(tablePath: String, tableSchema: StructType,
               "an overwriting stream would erase delivered history per epoch")
           new LakeStreamingWrite(tablePath, info.schema(),
             Option(info.options.get("txnAppId")).getOrElse(info.queryId()),
-            info.queryId(), pvc)
+            info.queryId(), layout)
         }
       }
     }
@@ -1714,10 +1708,11 @@ final class LakeRowLevelOperation(table: String, tableSchema: StructType,
       override def build(): Write = new Write {
         override def toBatch(): BatchWrite =
           new LakeReplaceDataWrite(table, info.schema(), info.queryId(),
-            LakeRowLevelOperation.this,
-            // rewritten rows of a PARTITIONED table keep the hive shape:
-            // per-value staged files, the column only in the add actions
-            LakeStreamTable.pvColOf(tableSchema))
+            LakeRowLevelOperation.this, {
+              // rewritten rows keep the table's layout
+              val spark = SparkSession.active
+              LakeTxn.layoutOf(spark, table, LakeTxn.snapshot(spark, table))
+            })
       }
     }
 }
@@ -1798,92 +1793,71 @@ final class LakeRowLevelScan(op: LakeRowLevelOperation, table: String,
   }
 }
 
+/** `staged` pairs each file a task staged with its layout key — the
+  * partition value or decimal bucket id of its rows, null on a plain
+  * table ([[LakeTxn.Layout]]). */
+final case class LakeWriteCommit(staged: Seq[(String, String)])
+    extends WriterCommitMessage
+
+object LakeWriteCommit {
+  /** The staged files of every task that committed. */
+  def staged(messages: Array[WriterCommitMessage]): Seq[(String, String)] =
+    messages.toSeq.collect { case m: LakeWriteCommit => m.staged }.flatten
+}
+
+/** The driver half shared by the three batch writes: executors stage
+  * parquet under `.stage-v2<kind>-<query>` (invisible to readers), and
+  * the driver publishes exactly the task-committed files through
+  * [[publish]] — speculative losers never publish (the commit
+  * coordinator admits one attempt per partition), and stragglers' and
+  * aborted writes' leftovers die with the stage dir. */
+abstract class LakeStagedBatchWrite(table: String, schema: StructType, queryId: String,
+                                    kind: String, layout: LakeTxn.Layout)
+    extends BatchWrite {
+  private val stageDir = s".stage-v2$kind-${queryId.replaceAll("[^A-Za-z0-9]", "")}"
+
+  /** One atomic log commit of the staged files. */
+  protected def publish(staged: Seq[(String, String)]): Unit
+
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+    new LakeWriterFactory(table, stageDir, schema.json,
+      ShippedConf(SparkSession.active), layout)
+
+  private def dropStage(): Unit = {
+    val p = new Path(table, stageDir)
+    val fs = p.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
+    fs.delete(p, true): Unit
+  }
+
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    try publish(LakeWriteCommit.staged(messages)) finally dropStage()
+
+  override def abort(messages: Array[WriterCommitMessage]): Unit = dropStage()
+}
+
 /** The replace-data write: staged rewritten rows publish as ONE atomic
   * commit that removes exactly the files the operation's scan planned —
   * [[graft.ext.LakeTxn.replaceFilesCommit]] aborts on conflicting
   * interleaved rewrites of those files (appends commute). */
 final class LakeReplaceDataWrite(table: String, schema: StructType,
                                  queryId: String, op: LakeRowLevelOperation,
-                                 pvCol: Option[String] = None)
-    extends BatchWrite {
-  private val stageDir = s".stage-v2r-${queryId.replaceAll("[^A-Za-z0-9]", "")}"
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new LakeWriterFactory(table, stageDir, schema.json,
-      ShippedConf(SparkSession.active), pvCol)
-
-  private def dropStage(): Unit = {
-    val p = new Path(table, stageDir)
-    val fs = p.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
-    fs.delete(p, true): Unit
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val ms = messages.collect { case m: LakeWriteCommit => m }
-    val staged = ms.flatMap(_.files).toSeq
-    val pvByFile = ms.flatMap(m => m.files.zip(m.pvs)).toMap
-    try LakeTxn.replaceFilesCommit(SparkSession.active, table, staged,
-      op.readVersion, op.scannedFiles,
-      pvCol = pvCol.orNull, pvByFile = pvByFile): Unit
-    finally dropStage()
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = dropStage()
+                                 layout: LakeTxn.Layout = LakeTxn.Plain)
+    extends LakeStagedBatchWrite(table, schema, queryId, "r", layout) {
+  override protected def publish(staged: Seq[(String, String)]): Unit =
+    LakeTxn.replaceFilesCommit(SparkSession.active, table, staged, schema,
+      op.readVersion, op.scannedFiles, layout): Unit
 }
 
-/** `pvs` aligns with `files`: the log-recorded partition value of each
-  * staged file when the table is partitioned (empty otherwise). */
-final case class LakeWriteCommit(files: Seq[String], pvs: Seq[String] = Nil)
-    extends WriterCommitMessage
-
-/** The driver half of the V2 write: collect the task-committed staged
-  * files and publish them through [[LakeTxn]] as one atomic commit
-  * (constraints enforced, writer protocol gate applied); abort deletes
-  * the stage dir wholesale. On a PARTITIONED table each staged file
-  * holds one partition value's rows (the column physically absent) and
-  * the commit stamps `pvCol`/`pvValue` per add action — pure-SQL
-  * `INSERT INTO` lands hive-shaped partitioned data with log-based
-  * pruning, no directory listing anywhere. */
+/** APPEND through the connector: one atomic commit of the staged files
+  * ([[LakeTxn.commitStagedV2]]: constraints enforced, writer protocol
+  * gate applied, each add stamped with its file's layout key — pure-SQL
+  * `INSERT INTO` lands partitioned or bucketed data the way the table is
+  * laid out). */
 final class LakeBatchWrite(table: String, schema: StructType, queryId: String,
-                           pvCol: Option[String] = None)
-    extends BatchWrite {
-  private val stageDir = s".stage-v2w-${queryId.replaceAll("[^A-Za-z0-9]", "")}"
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new LakeWriterFactory(table, stageDir, schema.json,
-      ShippedConf(SparkSession.active), pvCol)
-
-  private def dropStage(): Unit = {
-    val p = new Path(table, stageDir)
-    val fs = p.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
-    fs.delete(p, true): Unit
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val ms = messages.collect { case m: LakeWriteCommit => m }
-    val staged = ms.flatMap(_.files).toSeq
-    val pvByFile = ms.flatMap(m => m.files.zip(m.pvs)).toMap
-    try LakeTxn.commitStagedV2(SparkSession.active, table, staged,
-      pvCol = pvCol.orNull, pvByFile = pvByFile)
-    finally dropStage() // losers' and stragglers' leftovers die with it
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = dropStage()
-}
-
-/** The executor half's factory. `conf` is the [[ShippedConf]] broadcast
-  * of the driver's session Hadoop configuration: cached per context and
-  * conf content, dropped from the cache when the content changes, freed
-  * by Spark's `ContextCleaner` once no factory holds it. The task binary
-  * carries only the handle; each writer only reads the shared value. */
-final class LakeWriterFactory(table: String, stageDir: String, schemaJson: String,
-                              private[graft] val conf: Broadcast[SerializableConfiguration],
-                              pvCol: Option[String] = None)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new LakeDataWriter(table, stageDir,
-      DataType.fromJson(schemaJson).asInstanceOf[StructType], partitionId, taskId,
-      conf.value.value, pvCol = pvCol)
+                           layout: LakeTxn.Layout = LakeTxn.Plain)
+    extends LakeStagedBatchWrite(table, schema, queryId, "w", layout) {
+  override protected def publish(staged: Seq[(String, String)]): Unit =
+    LakeTxn.commitStagedV2(SparkSession.active, table, staged, schema, layout): Unit
 }
 
 /** The driver half of an OVERWRITE: the read version pins at JOB START
@@ -1894,32 +1868,14 @@ final class LakeWriterFactory(table: String, stageDir: String, schemaJson: Strin
 final class LakeOverwriteBatchWrite(table: String, schema: StructType,
                                     queryId: String,
                                     scope: Option[(String, Seq[String])],
-                                    pvCol: Option[String] = None)
-    extends BatchWrite {
+                                    layout: LakeTxn.Layout = LakeTxn.Plain)
+    extends LakeStagedBatchWrite(table, schema, queryId, "o", layout) {
   private val readVersion =
     LakeTxn.listVersions(SparkSession.active, table).lastOption.getOrElse(-1L)
-  private val stageDir = s".stage-v2o-${queryId.replaceAll("[^A-Za-z0-9]", "")}"
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new LakeWriterFactory(table, stageDir, schema.json,
-      ShippedConf(SparkSession.active), pvCol)
-
-  private def dropStage(): Unit = {
-    val p = new Path(table, stageDir)
-    val fs = p.getFileSystem(SparkSession.active.sessionState.newHadoopConf())
-    fs.delete(p, true): Unit
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val ms = messages.collect { case m: LakeWriteCommit => m }
-    val staged = ms.flatMap(_.files).toSeq
-    val pvByFile = ms.flatMap(m => m.files.zip(m.pvs)).toMap
-    try LakeTxn.overwriteStagedV2(SparkSession.active, table, staged,
-      readVersion, scope, pvByFile): Unit
-    finally dropStage()
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit = dropStage()
+  override protected def publish(staged: Seq[(String, String)]): Unit =
+    LakeTxn.overwriteStagedV2(SparkSession.active, table, staged, schema,
+      readVersion, scope, layout): Unit
 }
 
 /** The driver half of the STREAMING sink: one stage dir per query
@@ -1930,75 +1886,87 @@ final class LakeOverwriteBatchWrite(table: String, schema: StructType,
   * commits nothing (re-delivery of nothing needs no marker). */
 final class LakeStreamingWrite(table: String, schema: StructType,
                                appId: String, queryId: String,
-                               pvCol: Option[String] = None)
+                               layout: LakeTxn.Layout = LakeTxn.Plain)
     extends StreamingWrite {
   private val stageDir = s".stage-v2s-${queryId.replaceAll("[^A-Za-z0-9]", "")}"
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new LakeStreamingWriterFactory(table, stageDir, schema.json,
-      ShippedConf(SparkSession.active), pvCol)
+    new LakeWriterFactory(table, stageDir, schema.json,
+      ShippedConf(SparkSession.active), layout)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val ms = messages.collect { case m: LakeWriteCommit => m }
-    val staged = ms.flatMap(_.files).toSeq
-    val pvByFile = ms.flatMap(m => m.files.zip(m.pvs)).toMap
+    val staged = LakeWriteCommit.staged(messages)
     if (staged.nonEmpty)
-      LakeTxn.commitStagedV2(SparkSession.active, table, staged,
-        marker = Some((appId, epochId)),
-        pvCol = pvCol.orNull, pvByFile = pvByFile): Unit
+      LakeTxn.commitStagedV2(SparkSession.active, table, staged, schema, layout,
+        marker = Some((appId, epochId))): Unit
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
     val fs = new Path(table).getFileSystem(spark.sessionState.newHadoopConf())
-    messages.collect { case m: LakeWriteCommit => m.files }.flatten
-      .foreach(f => fs.delete(new Path(table, f), false))
+    LakeWriteCommit.staged(messages).foreach(f => fs.delete(new Path(table, f._1), false))
   }
 }
 
-/** [[LakeWriterFactory]] for the streaming sink, one staged file set per
-  * epoch. `conf` is the same [[ShippedConf]] broadcast (cached per
-  * context and conf content, freed by Spark's `ContextCleaner` once no
-  * factory holds it); each writer only reads the shared value. */
-final class LakeStreamingWriterFactory(table: String, stageDir: String,
-                                       schemaJson: String,
-                                       private[graft] val conf: Broadcast[SerializableConfiguration],
-                                       pvCol: Option[String] = None)
-    extends StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-                            epochId: Long): DataWriter[InternalRow] =
+/** The executor half's factory, for batch writes and the streaming sink
+  * alike (a streaming writer suffixes its files with the epoch). `conf`
+  * is the [[ShippedConf]] broadcast of the driver's session Hadoop
+  * configuration: cached per context and conf content, dropped from the
+  * cache when the content changes, freed by Spark's `ContextCleaner`
+  * once no factory holds it. The task binary carries only the handle;
+  * each writer only reads the shared value. */
+final class LakeWriterFactory(table: String, stageDir: String, schemaJson: String,
+                              private[graft] val conf: Broadcast[SerializableConfiguration],
+                              layout: LakeTxn.Layout)
+    extends DataWriterFactory with StreamingDataWriterFactory {
+  private def writer(partitionId: Int, taskId: Long, suffix: String): DataWriter[InternalRow] =
     new LakeDataWriter(table, stageDir,
       DataType.fromJson(schemaJson).asInstanceOf[StructType], partitionId, taskId,
-      conf.value.value, suffix = s"-e$epochId", pvCol = pvCol)
+      conf.value.value, suffix, layout)
+
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+    writer(partitionId, taskId, "")
+
+  override def createWriter(partitionId: Int, taskId: Long,
+                            epochId: Long): DataWriter[InternalRow] =
+    writer(partitionId, taskId, s"-e$epochId")
 }
 
-/** The executor half: rows of one partition → one staged parquet file
+/** The executor half: rows of one partition → staged parquet files
   * (example Group API over a MessageType derived from the write schema
-  * — the same atomic-type contract the read side enforces). On a
-  * PARTITIONED table (`pvCol` set) rows split into one staged file per
-  * partition VALUE seen by this task, the column physically absent from
-  * the files (hive layout; values ride the commit's add actions) —
-  * NULL/empty values are refused up front, the
-  * `__HIVE_DEFAULT_PARTITION__` corruption guard. `hadoopConf` is the
-  * shipped session conf, read only, with no default (see
-  * [[LakeFileReader]]). */
+  * — the same atomic-type contract the read side enforces), one per
+  * layout KEY seen by this task: a plain table's task writes one file;
+  * on a PARTITIONED table each partition VALUE gets its own file, the
+  * column physically absent (hive layout; values ride the commit's add
+  * actions) and NULL/empty values refused, the
+  * `__HIVE_DEFAULT_PARTITION__` corruption guard; on a BUCKETED table
+  * each row routes to the file of its [[LakeTxn.bucketId]], a NULL or
+  * non-BIGINT key refused. `hadoopConf` is the shipped session conf,
+  * read only, with no default (see [[LakeFileReader]]). */
 final class LakeDataWriter(table: String, stageDir: String, schema: StructType,
                            partitionId: Int, taskId: Long,
                            hadoopConf: Configuration,
-                           suffix: String = "",
-                           pvCol: Option[String] = None)
+                           suffix: String,
+                           layout: LakeTxn.Layout)
     extends DataWriter[InternalRow] {
   import org.apache.parquet.schema.{LogicalTypeAnnotation => LTA, Types => PTypes}
   import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 
-  private val pcIdx = pvCol.fold(-1)(pc => schema.fieldIndex(pc))
-  pvCol.foreach(pc => require(schema(pc).dataType == StringType,
-    s"partition column '$pc' must be STRING (is " +
-      s"${schema(pc).dataType.simpleString})"))
-  /** What the files physically carry: everything but the partition col. */
-  private val writeSchema =
-    pvCol.fold(schema)(pc => StructType(schema.fields.filterNot(_.name == pc)))
+  /** The incoming ordinal of the layout column (-1 on a plain table). */
+  private val keyIdx = layout match {
+    case LakeTxn.Partitioned(pc) =>
+      require(schema(pc).dataType == StringType,
+        s"partition column '$pc' must be STRING (is ${schema(pc).dataType.simpleString})")
+      schema.fieldIndex(pc)
+    case LakeTxn.Bucketed(k, _) =>
+      require(schema(k).dataType == LongType,
+        s"bucket key '$k' must be BIGINT (is ${schema(k).dataType.simpleString})")
+      schema.fieldIndex(k)
+    case LakeTxn.Plain => -1
+  }
+  /** What the files physically carry. */
+  private val writeSchema = layout.fileSchema(schema)
   /** writeSchema ordinal -> incoming row ordinal. */
   private val srcIdx: Array[Int] = writeSchema.fields.map(f => schema.fieldIndex(f.name))
 
@@ -2033,14 +2001,13 @@ final class LakeDataWriter(table: String, stageDir: String, schema: StructType,
     new org.apache.parquet.example.data.simple.SimpleGroupFactory(messageType)
   private var closed = false
 
-  /** One open staged file per partition value ("" = unpartitioned, where
-    * the single file opens eagerly so an empty task still commits its
-    * 0-row file — the pre-partitioning behavior). */
+  /** One open staged file per layout key (null = plain, where the single
+    * file opens eagerly so an empty task still commits its 0-row file). */
   private val open = scala.collection.mutable.LinkedHashMap[
     String, (org.apache.parquet.hadoop.ParquetWriter[Group], String)]()
 
-  private def writerFor(pv: String): org.apache.parquet.hadoop.ParquetWriter[Group] =
-    open.getOrElseUpdate(pv, {
+  private def writerFor(key: String): org.apache.parquet.hadoop.ParquetWriter[Group] =
+    open.getOrElseUpdate(key, {
       val rel = s"$stageDir/part-$partitionId-$taskId$suffix-${open.size}.parquet"
       (org.apache.parquet.hadoop.example.ExampleParquetWriter
         .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
@@ -2049,17 +2016,21 @@ final class LakeDataWriter(table: String, stageDir: String, schema: StructType,
         .build(), rel)
     })._1
 
-  if (pcIdx < 0) writerFor("")
+  if (keyIdx < 0) writerFor(null)
 
   override def write(row: InternalRow): Unit = {
-    val pv =
-      if (pcIdx < 0) ""
-      else {
-        require(!row.isNullAt(pcIdx) && row.getUTF8String(pcIdx).numChars() > 0,
-          s"partition column '${pvCol.get}' must not be NULL or empty " +
+    val key = layout match {
+      case LakeTxn.Plain => null
+      case LakeTxn.Partitioned(pc) =>
+        require(!row.isNullAt(keyIdx) && row.getUTF8String(keyIdx).numChars() > 0,
+          s"partition column '$pc' must not be NULL or empty " +
             s"(hive maps both to the __HIVE_DEFAULT_PARTITION__ sentinel)")
-        row.getUTF8String(pcIdx).toString
-      }
+        row.getUTF8String(keyIdx).toString
+      case LakeTxn.Bucketed(k, n) =>
+        require(!row.isNullAt(keyIdx),
+          s"bucket key '$k' must not contain NULLs (a null row has no bucket)")
+        LakeTxn.bucketId(row.getLong(keyIdx), n).toString
+    }
     val g = factory.newGroup()
     var j = 0
     while (j < writeSchema.length) {
@@ -2081,13 +2052,12 @@ final class LakeDataWriter(table: String, stageDir: String, schema: StructType,
       }
       j += 1
     }
-    writerFor(pv).write(g)
+    writerFor(key).write(g)
   }
 
   override def commit(): WriterCommitMessage = {
     close()
-    LakeWriteCommit(open.values.map(_._2).toSeq,
-      if (pcIdx < 0) Nil else open.keys.toSeq)
+    LakeWriteCommit(open.toSeq.map { case (key, (_, rel)) => (rel, key) })
   }
 
   override def abort(): Unit = {

@@ -102,8 +102,8 @@ class LakePartSpec extends SparkSpec {
     assert(r1.count() === 40L)
     assert(r1.select("lang").distinct().collect().map(_.getString(0)).sorted
       === Array("en", "fr"))
-    // post-compaction files carry the column INLINE: a partition read
-    // keeps them conservatively and still answers exactly
+    // post-compaction files keep the partition layout: a partition read
+    // prunes them from the log and still answers exactly
     val (en, _, _) = LakeTxn.readPartitions(spark, t, "lang", Seq("en"))
     assert(en.count() === 20L)
     // the partitioned append path enforces CHECK constraints too

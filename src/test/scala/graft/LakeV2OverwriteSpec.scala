@@ -61,7 +61,8 @@ class LakeV2OverwriteSpec extends SparkSpec {
     // ...and the stale overwrite must abort: its blind remove-all would
     // erase the interleaved rows
     intercept[LakeTxn.CommitConflictException](
-      LakeTxn.overwriteStagedV2(spark, t, staged.map(_.file), readVersion, None))
+      LakeTxn.overwriteStagedV2(spark, t, staged.map(a => (a.file, null: String)),
+        mkDocs(0 until 1).schema, readVersion, None))
     assert(LakeTxn.read(spark, t).count() === 30L)
   }
 

@@ -53,7 +53,7 @@ class ShippedConfSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       "LakeWriterFactory (overwrite)" ->
         new LakeOverwriteBatchWrite(table, schema, "q2", None)
           .createBatchWriterFactory(null),
-      "LakeStreamingWriterFactory" ->
+      "LakeWriterFactory (streaming)" ->
         new LakeStreamingWrite(table, schema, "app", "q3")
           .createStreamingWriterFactory(null))
     val sizes = factories.map { case (name, f) => name -> closureBytes(f) }
